@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amazon_books_review_spark.functions.dedup import shingles
+from amazon_books_review_spark.session import materialize
 
 #: Overlap gram length — 8 words, the common public-pipeline choice.
 DECONTAM_NGRAM = 8
@@ -117,19 +118,13 @@ def flag_contaminated_hashed(
     cross-engine-replayable hash.
 
     ``eval_grams`` feeds BOTH stages (the hash-set build and the exact
-    verify join), so it is materialized once via ``localCheckpoint``
-    — without the pin the full eval shingling runs twice, a second
-    pass over the whole benchmark battery at the 1e8-gram scale this
-    tier exists for (ADVICE r13).  ``localCheckpoint`` (RDD-level
-    storage, MEMORY_AND_DISK) rather than ``persist()``: Dataset
-    ``persist`` registers the subtree in the session-global cache
-    manager, which then substitutes an ``InMemoryRelation`` into ANY
-    other query sharing the analyzed subtree — the exact tier's plan
-    silently changed shape depending on whether this tier had run
-    first (ADVICE r14).  The eval side is small by construction, so
-    the checkpointed copy is bounded, not corpus-sized.
+    verify join), so it is materialized once — without that the full
+    eval shingling runs twice, a second pass over the whole benchmark
+    battery at the 1e8-gram scale this tier exists for.  The eval side
+    is small by construction, so the stored copy is bounded, not
+    corpus-sized.
     """
-    eval_grams = eval_ngram_set(eval_df, id_col, text_col, n=n).localCheckpoint()
+    eval_grams = materialize(eval_ngram_set(eval_df, id_col, text_col, n=n))
     eval_hashes = eval_grams.select(F.xxhash64("shingle").alias("_h")).distinct()
     train_grams = shingles(train_df, id_col, text_col, n=n)
     cand = (

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from amazon_books_review_spark.functions.text import tokens
 from amazon_books_review_spark.functions.text import word_ngrams as text_ngrams
+from amazon_books_review_spark.session import materialize
 
 
 def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -423,11 +424,9 @@ def connected_components(
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
-    # localCheckpoint: truncates lineage per round (cache alone keeps
-    # the full recursive plan, which explodes after ~10 rounds)
-    sym = sym.localCheckpoint()
+    sym = materialize(sym)
     nodes = sym.select(F.col("src").alias("node")).distinct()
-    labels = nodes.withColumn("label", F.col("node")).localCheckpoint()
+    labels = materialize(nodes.withColumn("label", F.col("node")))
     # Node count is dimension-sized and already materialized: one cheap
     # count buys broadcast label joins every round (no edge shuffle).
     n_nodes = labels.count()
@@ -457,7 +456,7 @@ def connected_components(
                 F.col("new_label").alias("label"),
                 (F.col("new_label") != F.col("old_label")).cast("long").alias("ch"),
             )
-            .localCheckpoint()
+            .transform(materialize)
         )
         changed = merged.agg(F.sum("ch")).first()[0]
         labels = merged.select("node", "label")
@@ -527,16 +526,13 @@ def connected_components_star(
         .filter(F.col("src") != F.col("dst"))
     )
     # orient big -> small; the star loop maintains this invariant
-    # localCheckpoint (not cache): it TRUNCATES lineage, so the plan
-    # stays O(1) deep across rounds — cache alone keeps the full
-    # recursive plan and the tree explodes after ~10 iterations.
     edges = (
         raw.select(
             F.greatest("src", "dst").alias("src"),
             F.least("src", "dst").alias("dst"),
         )
         .distinct()
-        .localCheckpoint()
+        .transform(materialize)
     )
 
     def large_star(e: DataFrame) -> DataFrame:
@@ -580,8 +576,8 @@ def connected_components_star(
     for _ in range(max_iter):
         ls = large_star(edges)
         if prev_count >= _STAR_LS_CKPT_MIN_EDGES:
-            ls = ls.localCheckpoint()
-        new_edges = small_star(ls).localCheckpoint()
+            ls = materialize(ls)
+        new_edges = materialize(small_star(ls))
         new_count = new_edges.count()
         same = (
             new_count == prev_count

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from amazon_books_review_spark.session import materialize
+
 
 def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -262,7 +264,7 @@ def ivf_topk_multi(
                 dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")), 6
             ).alias("sim"),
         )
-        .localCheckpoint()  # narrow; scored exactly once
+        .transform(materialize)  # narrow; scored exactly once
     )
     w2 = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
@@ -1761,7 +1763,7 @@ def cosine_neardup_lsh_verified(
     # columns x n_tables*|corpus| rows.  Without this, the self-join
     # recomputes the signature pass for BOTH sides (measured ~1s
     # slower warm AND colder one-shot).
-    sigs = sigs.localCheckpoint()
+    sigs = materialize(sigs)
     if probe_bits not in (0, 1):
         raise ValueError(f"probe_bits must be 0, 1 or 2, got {probe_bits}")
     v = corpus.select(

@@ -46,8 +46,7 @@ def helper_sources(fn: Callable) -> str:
     registered audit calls, so a fn-source-only hash kept the stale
     green row (the r7 ``_run_masses`` pattern, again).  One level
     covers the catalog's actual composition depth for its hot
-    helpers; a deeper rewrite below that still needs a pin
-    (``DRIVER_PINS``), which stays the documented fallback.
+    helpers; a rewrite deeper than that does not change the hash.
     """
     import ast
     import textwrap
@@ -278,51 +277,9 @@ def change_evicted(name: str) -> bool:
     return VERIFIED_HASHES.get(name) != entry.src_hash
 
 
-#: Window pins (round 6): the three watermark streaming queries broke
-#: in round 5's environment (TIMESTAMP_NTZ drift in events.ts) and were
-#: fixed in round 6.  Their r4 green rows predated the fix, so the
-#: regreen needed a HARD CORRECTNESS row — they re-entered the window
-#: under canonical names ahead of the staleness rotation (VERDICT r5
-#: "Next round" #1 graded exactly this).  The window holds 50; with 49
-#: never-verified round-6 additions, pinning displaced THREE pending
-#: names to the r7 window: ``variant_props_extract``,
-#: ``warcish_pruned_scan``, and ``warcish_roundtrip`` (all three stayed
-#: DuckDB-parity-green locally every pytest run via
-#: tests/test_oracle_parity.py while deferred).
-#:
-#: Pins self-expire: a pin only applies while the query's last green
-#: CORRECTNESS row predates ``_PIN_FIXED_ROUND`` (the round the fix
-#: landed).  CORRECTNESS_r06.json recorded green rows for all three, so
-#: as of round 7 the pins are inert and the displaced names lead the
-#: window — no manual removal step to forget.
-_PIN_FIXED_ROUND = 6
-#: name -> round the fix landed; the pin holds until the driver records
-#: a green row from >= that round, then self-expires.
-DRIVER_PINS: dict[str, int] = {
-    "streaming_windowed_counts": _PIN_FIXED_ROUND,
-    "streaming_stream_stream_join": _PIN_FIXED_ROUND,
-    "streaming_dedup_events": _PIN_FIXED_ROUND,
-    # round 9: the KMV estimator core (`kmv_intersection_estimates`, a
-    # HELPER the registered audit calls) was rewritten for the round-8
-    # review's degenerate-input finding.  `src_hash` covers only the
-    # registered function + oracle, so helper rewrites do not
-    # change-evict — pin the audit for a hard re-verify instead.
-    "kmv_intersection_audit": 9,
-}
-DRIVER_PIN: frozenset = frozenset(DRIVER_PINS)
-
-
-def _pin_active(name: str) -> bool:
-    """A pin holds only until the driver records a row >= the fix round."""
-    fixed = DRIVER_PINS.get(name)
-    return fixed is not None and DRIVER_VERIFIED.get(name, -1) < fixed
-
-
 def driver_name(name: str) -> str:
     """Registration name as exposed to the driver for this round."""
     _load_all()  # the rows-only special case below consults the registry
-    if _pin_active(name):
-        return name
     info = _DRIVER_ROWS.get(name)
     if info is None:
         return name

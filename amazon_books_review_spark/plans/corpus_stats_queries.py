@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from amazon_books_review_spark.session import materialize
 from amazon_books_review_spark.sources.io import load_table
 
 
@@ -200,7 +201,7 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "w1", "w2")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    bg = bg.localCheckpoint(eager=True)  # (doc, bigram) grain; pair-shuffle ONCE
+    bg = materialize(bg)  # (doc, bigram) grain; pair-shuffle ONCE
     c12 = bg.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = c12.agg(F.count_distinct("w2").alias("v"))
@@ -449,7 +450,7 @@ def wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n_occ"))
-        .localCheckpoint(eager=True)  # recursion re-reads the frontier seed
+        .transform(materialize)  # recursion re-reads the frontier seed
     )
     words.select("word").createOrReplaceTempView("wp_words")
     words.createOrReplaceTempView("wp_counts")
@@ -557,7 +558,7 @@ def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n_occ"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
 
 
@@ -571,7 +572,7 @@ def _bpe_merge_rounds(words: DataFrame) -> list[tuple]:
             F.lit(" "),
         ).alias("rep"),
         "n_occ",
-    ).localCheckpoint()
+    ).transform(materialize)
     # ^ r19: materialize the word-TYPE symbol table ONCE — the per-round
     # pair count used to re-evaluate the whole corpus tokenize+agg under
     # the growing replace lineage (K rounds = K full corpus passes);

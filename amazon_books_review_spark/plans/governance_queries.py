@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from amazon_books_review_spark.session import materialize
 from amazon_books_review_spark.sources.io import load_table
 
 # ---------------------------------------------------------------------------
@@ -338,7 +339,7 @@ def join_size_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
     prod = (
         a.join(b, "k")
         .select("k", (F.col("ca") * F.col("cb")).alias("out_rows"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     topn = global_top_k(
         prod, [F.col("out_rows").desc(), F.col("k").asc()], PREFLIGHT_TOP

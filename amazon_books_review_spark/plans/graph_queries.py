@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from amazon_books_review_spark.operators.joins import broadcast_if_small
 from amazon_books_review_spark.operators.windows import global_top_k
 from amazon_books_review_spark.plans.scale_ops_queries import copurchase_edges
+from amazon_books_review_spark.session import materialize
 from amazon_books_review_spark.sources.io import load_table
 
 #: synchronous update rounds.  3 is where sf0.01/sf0.1 label churn
@@ -110,7 +111,7 @@ def propagate_labels(edges: DataFrame, iters: int = LP_ITERS) -> DataFrame:
     checkpointed blocks directly, which is where the block-clustering
     compression lives (scale_ops_queries.pagerank_copurchase).
     """
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges)
     labels = None  # round 1: identity labels, join elided
     n_nodes = None
     for _ in range(iters):
@@ -136,7 +137,7 @@ def propagate_labels(edges: DataFrame, iters: int = LP_ITERS) -> DataFrame:
                 (-F.col("best.neg")).alias("lbl"),
             )
         )
-        labels = adopted.localCheckpoint(eager=True)
+        labels = materialize(adopted)
         if n_nodes is None:
             n_nodes = labels.count()  # node-sized, on the checkpoint
     if labels is None:  # iters == 0: identity labels
@@ -222,12 +223,11 @@ def adamic_adar_scores(adj: DataFrame) -> DataFrame:
     aggregate, the cap join, and the known-adjacent anti-join all
     used to re-evaluate the (expensive) upstream edge-build subtree;
     now each reads the materialized edges.  The old
-    ``repartition("src")`` before the checkpoint is gone:
-    ``localCheckpoint`` does not preserve partitioning (the scan
-    comes back as UnknownPartitioning), so that exchange was pure
-    cost.
+    ``repartition("src")`` before the checkpoint is gone: the
+    checkpoint does not preserve partitioning (the scan comes back as
+    UnknownPartitioning), so that exchange was pure cost.
     """
-    adj = adj.localCheckpoint(eager=True)
+    adj = materialize(adj)
     deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     wmap = F.create_map(
         *[F.lit(x) for kv in sorted(AA_WEIGHTS.items()) for x in kv]
@@ -235,7 +235,7 @@ def adamic_adar_scores(adj: DataFrame) -> DataFrame:
     hubs = deg.select("src", F.element_at(wmap, F.col("deg")).alias("wv")).filter(
         F.col("wv").isNotNull()
     )
-    capped = adj.join(F.broadcast(hubs), "src").localCheckpoint(eager=True)
+    capped = materialize(adj.join(F.broadcast(hubs), "src"))
     a, b = capped.alias("a"), capped.alias("b")
     scored = (
         a.join(b, "src")
@@ -332,7 +332,7 @@ def kcore_peel(edges: DataFrame, k: int = KCORE_K, iters: int = KCORE_ITERS) -> 
     sets are dimension-sized and AQE broadcasts them at test SF;
     at web scale they degrade to shuffle semi-joins on the same keys.
     """
-    cur = edges.localCheckpoint(eager=True)
+    cur = materialize(edges)
     prev_count = cur.count()
     for _ in range(iters):
         ko = cur.groupBy("o").agg(F.count(F.lit(1)).alias("c")).filter(
@@ -344,7 +344,7 @@ def kcore_peel(edges: DataFrame, k: int = KCORE_K, iters: int = KCORE_ITERS) -> 
         cur = (
             cur.join(ko, "o", "left_semi")
             .join(kp, "p", "left_semi")
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         # r19 exact early-stop: peeling only ever REMOVES edges, so an
         # unchanged count is a fixpoint and every remaining round is a

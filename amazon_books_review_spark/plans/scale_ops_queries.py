@@ -73,6 +73,7 @@ from pyspark.sql import functions as F
 
 from amazon_books_review_spark.functions import text
 from amazon_books_review_spark.operators.joins import broadcast_if_small
+from amazon_books_review_spark.session import materialize
 from amazon_books_review_spark.sources.io import load_table
 
 # ---------------------------------------------------------------------------
@@ -798,9 +799,9 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders.  Each iteration is one join of the (nodes-sized) rank
     table against edges partitioned by src plus one groupBy dst — the
     standard vertex-program shuffle pair; ranks are dimension-sized
-    and broadcastable when parts << lineitems.  ``localCheckpoint``
-    truncates the 5-iteration lineage like the connected-components
-    operator (functions/dedup.py).
+    and broadcastable when parts << lineitems.  Each round is
+    materialized, which truncates the 5-iteration lineage like the
+    connected-components operator (functions/dedup.py).
     """
     li = load_table(spark, sf_dir, "lineitem")
     edges = copurchase_edges(li, directed=True)
@@ -835,13 +836,11 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges_deg = (
         edges.withColumn("deg", F.count(F.lit(1)).over(w_deg))
         .repartition("dst")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     # Seed ranks once on a checkpointed node table; its count is the
     # graph order (saves the separate distinct-count job).
-    nodes = edges_deg.select(F.col("src").alias("node")).distinct().localCheckpoint(
-        eager=True
-    )
+    nodes = materialize(edges_deg.select(F.col("src").alias("node")).distinct())
     n_nodes = nodes.count()
     init = PR_SCALE // n_nodes
     base = (15 * init) // 100
@@ -858,7 +857,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("dst").alias("node"),
                 (F.lit(base) + F.expr("(85 * recv) div 100")).alias("r"),
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
     from pyspark.sql import Window
 
@@ -1398,7 +1397,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     running ``dmin`` fold over the points, grown map-side as a
     ``least(d2(c0), ..., d2(ci))`` expression of dim-sized literals
     over the ONCE-checkpointed point set (r19: the per-round
-    ``localCheckpoint`` re-materialized the whole corpus K times just
+    checkpoint re-materialized the whole corpus K times just
     to freeze one more ``least`` term — at most K small terms, the
     fold costs arithmetic, not storage).  Each round is one linear
     scan plus a 1-row argmax driver sync; total K scans — never a
@@ -1428,20 +1427,24 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from amazon_books_review_spark.sources.io import table_row_count
 
+    # Fail closed: an unreadable footer (pyarrow's ArrowInvalid is a
+    # ValueError) or a zero count — what a nested or hive-partitioned
+    # directory sums to — means the size is unknown, so the corpus
+    # stays on the distributed loop.
     try:
         n_rows = table_row_count(sf_dir, "embeddings")
-    except OSError:
-        n_rows = None  # non-parquet layout: fall through to the loop
+    except (OSError, ValueError):
+        n_rows = 0
     cap = int(
         spark.conf.get(KC_ARROW_MAX_ROWS_CONF, str(KC_DEFAULT_ARROW_MAX_ROWS))
     )
-    if n_rows is not None and n_rows <= cap:
+    if 0 < n_rows <= cap:
         picks = _kcenter_greedy_driver(pts_plan.toArrow())
         return spark.createDataFrame(
             picks, "pick_order long, vec_id long, dist_sq long"
         )
 
-    pts = pts_plan.localCheckpoint(eager=True)
+    pts = materialize(pts_plan)
 
     def d2_to(center_qv: list[int]):
         return F.aggregate(
@@ -1789,10 +1792,9 @@ def semdedup_embeddings(
     back — all shuffle keys are ints.
     """
     assigned = _km_final_assignment(spark, sf_dir, k=k)
-    # localCheckpoint: the assignment frame feeds BOTH sides of the
-    # self-join plus the final join back — without materializing it
-    # the whole k-means assignment (and its Arrow stage) would run
-    # three times inside one job.
+    # the assignment frame feeds BOTH sides of the self-join plus the
+    # final join back — materialized, the whole k-means assignment
+    # (and its Arrow stage) runs once, not three times.
     vecs = assigned.select(
         "vec_id",
         "cluster",
@@ -1802,7 +1804,7 @@ def semdedup_embeddings(
             F.lit(0).cast("long"),
             lambda acc, x: acc + x,
         ).alias("nsq"),
-    ).localCheckpoint()
+    ).transform(materialize)
     u = vecs.select(
         F.col("vec_id").alias("u_id"),
         F.col("cluster").alias("u_cluster"),
@@ -1923,14 +1925,13 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjacency groupBy, and two edge⋈adjacency joins — all O(E) rows.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    und = copurchase_edges(li, directed=False).localCheckpoint(
-        eager=True
-    )  # feeds degrees AND orientation
+    # feeds degrees AND orientation
+    und = materialize(copurchase_edges(li, directed=False))
     deg = (
         und.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )  # node-sized; checkpointed so the O(E) degree agg runs ONCE
     # (it used to re-run for the count job, both broadcast builds,
     # and the wedge rollup — four edge passes for one node table)
@@ -1954,7 +1955,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     oriented = keyed.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-    ).localCheckpoint(eager=True)  # feeds adjacency AND the edge scan
+    ).transform(materialize)  # feeds adjacency AND the edge scan
     adj = oriented.groupBy("a").agg(
         F.array_sort(F.collect_list("b")).alias("nbrs")
     )

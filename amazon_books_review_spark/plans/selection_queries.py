@@ -38,6 +38,7 @@ from pyspark.sql.window import Window
 
 from amazon_books_review_spark.functions.sampling import hash_bucket
 from amazon_books_review_spark.functions.text import GOPHER_STOPWORDS
+from amazon_books_review_spark.session import materialize
 from amazon_books_review_spark.sources.io import load_table
 
 # --- DSIR ------------------------------------------------------------------
@@ -86,7 +87,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_b = (
         feat.groupBy("doc_id", "lang", "bucket")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)  # (docs x <=B) rows; tokenize ONCE
+        .transform(materialize)  # (docs x <=B) rows; tokenize ONCE
     )
     b_stats = doc_b.groupBy("bucket").agg(
         F.sum("tf").alias("rc"),
@@ -475,7 +476,7 @@ def char_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     run = _entropy_run_struct()
     n = F.length("text").cast("long")
-    ent = _entropy_bits(F.col("_r.s"))
+    ent = _entropy_bits(F.col("text"), F.col("_r.s"))
     return (
         docs.select("doc_id", "text")
         .withColumn("_r", run)
@@ -528,12 +529,12 @@ def _entropy_run_struct() -> "F.Column":
     return F.aggregate(F.array_sort(chars), zero, merge, finish)
 
 
-def _entropy_bits(s_col: "F.Column") -> "F.Column":
-    """round(H, 4) in bits from the run fold's ``s`` field — the exact
-    expression of :func:`char_entropy_quality`, parameterized on where
-    the fold's struct lives so the funnel can reference its own
-    projection."""
-    n = F.length("text").cast("long")
+def _entropy_bits(text_col: "F.Column", s_col: "F.Column") -> "F.Column":
+    """round(H, 4) in bits of ``text_col`` from the run fold's ``s``
+    field — the exact expression of :func:`char_entropy_quality`,
+    parameterized on where the text and the fold's struct live so the
+    funnel can reference its own projection."""
+    n = F.length(text_col).cast("long")
     return F.round(
         (F.log(n.cast("double")) - s_col / n) / F.lit(float(__import__("math").log(2))),
         4,
@@ -669,7 +670,7 @@ def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from amazon_books_review_spark.sources.io import load_table as _lt
 
     docs = _lt(spark, sf_dir, "documents")
-    ent = _entropy_bits(F.col("_r.s"))
+    ent = _entropy_bits(F.col("text"), F.col("_r.s"))
     scored = (
         docs.select("doc_id", "text")
         .withColumn("_r", _entropy_run_struct())

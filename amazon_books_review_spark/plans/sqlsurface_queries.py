@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from amazon_books_review_spark.session import materialize
 from amazon_books_review_spark.sources.io import load_table
 
 # ---------------------------------------------------------------------------
@@ -89,7 +90,7 @@ def copurchase_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frontier does NOT dedup between iterations — duplicate paths
     multiply by ~avg-degree per hop, which is why the hop bound is 2
     and why unbounded traversals (connected components) use the
-    iterative DataFrame loop with per-round dedup + localCheckpoint
+    iterative DataFrame loop with per-round dedup + materialize
     in `functions/dedup.connected_components` instead.  The final
     min-hop GROUP BY collapses the path multiset.
     """
@@ -101,9 +102,9 @@ def copurchase_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (one order-key shuffle, no fact self-join) and is checkpointed so
     # each recursion step reads the materialized edge set instead of
     # re-deriving it per hop (temp views inline into the loop body)
-    copurchase_edges(li, directed=True).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("abr_reach_edges")
+    materialize(copurchase_edges(li, directed=True)).createOrReplaceTempView(
+        "abr_reach_edges"
+    )
     return spark.sql(
         f"""
         WITH seed AS (
@@ -242,7 +243,7 @@ def runtime_bloom_join_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         for k, v in _BLOOM_CONFS.items():
             spark.conf.set(k, v)
-        return _bloom_join(spark, sf_dir).localCheckpoint(eager=True)
+        return materialize(_bloom_join(spark, sf_dir))
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)

@@ -14,7 +14,7 @@ the session is handed to us (the driver harness creates its own).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime-settable SQL confs that define this engine's semantics.
 #: All of these are session-scoped (safe to set on a borrowed session).
@@ -74,6 +74,37 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     except Exception:  # pragma: no cover
         pass
     return spark
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly compute ``df`` once and return a frame that reads the
+    stored result — the engine's single materialization primitive.
+
+    Why operators materialize at all:
+
+    - **Lineage truncation.**  Iterative operators (PageRank, label
+      propagation, connected components, k-core peeling, BPE merges)
+      feed each round's output into the next; without a cut the plan
+      grows one subtree per round and Catalyst's analysis time explodes
+      after ~10 rounds.  ``cache``/``persist`` does NOT cut the plan.
+    - **Shared subtrees.**  Catalyst does not dedupe a subtree consumed
+      twice in one plan (a self-join, a frame feeding both a count and
+      a join, anything over a ``mapInPandas`` kernel), so without this
+      the producing work — shuffles, Python workers — runs once per
+      consumer.  Dataset ``persist`` would dedupe, but it registers the
+      subtree in the session-global cache manager, which then silently
+      reshapes OTHER queries sharing that analyzed subtree.
+
+    Where the result lives is a session decision, not an operator's:
+    with ``sparkContext.setCheckpointDir`` set (HDFS/object store on a
+    cluster) it is a reliable ``checkpoint`` that survives executor
+    loss; otherwise a ``localCheckpoint`` — executor-local blocks, fast
+    but NOT recoverable, right for a single local JVM.  Both are eager
+    and row-identical.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
 def delta_session_confs() -> dict[str, str]:

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
 
+from amazon_books_review_spark.session import materialize
+
 #: The driver-provided test tables (TESTDATA.md).
 TESTDATA_TABLES = (
     "region",
@@ -429,7 +431,7 @@ def write_stream_update_upsert(
         from pyspark.errors import AnalysisException
 
         spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()
+        batch_df = materialize(batch_df)
         try:
             existing = spark.read.parquet(path)
             merged = existing.join(
@@ -447,7 +449,7 @@ def write_stream_update_upsert(
             ):
                 raise
             merged = batch_df
-        merged.localCheckpoint().write.mode("overwrite").parquet(path)
+        materialize(merged).write.mode("overwrite").parquet(path)
 
     writer = (
         df.writeStream.outputMode("update")

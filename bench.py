@@ -62,7 +62,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Both shots are recorded in the detail file (solo_shots), so the
 # discarded fresh number stays auditable.
 _SOLO_RERUN_UNDER_SEC = 10.0
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: Every CPU this process may use, as in querybench/run.py.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 WARMUP_SF_DIR = os.environ.get(
     "SPARK_GRAFT_WARMUP_SF_DIR",
     os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001"),
@@ -582,17 +583,35 @@ def _next_round() -> int:
     return max(rounds) + 1
 
 
-def main() -> None:
+def _driver_memory() -> str:
+    """A quarter of MemTotal, at most 16g, as in querybench/run.py: the
+    JVM heap is the whole local-mode cluster, the Python workers need
+    the rest."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{min(16384, kb // 4096)}m"
+
+
+def _session(app_name: str):
     from amazon_books_review_spark.session import get_session
-    from amazon_books_review_spark.plans.catalog import all_queries
 
     spark = get_session(
-        app_name="abr-bench",
+        app_name=app_name,
         master=f"local[{CPUS}]",
         shuffle_partitions=CPUS,
-        extra_confs={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
+        extra_confs={
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": _driver_memory(),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def main() -> None:
+    from amazon_books_review_spark.plans.catalog import all_queries
+
+    spark = _session("abr-bench")
     queries = all_queries()
 
     # Warm up the JVM + file listing with one tiny action.
@@ -694,13 +713,7 @@ def main() -> None:
     solo_floors: dict[str, float] = {}
     for name in suspects:
         spark.stop()
-        spark = get_session(
-            app_name=f"abr-bench-solo-{name}",
-            master=f"local[{CPUS}]",
-            shuffle_partitions=CPUS,
-            extra_confs={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
-        )
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = _session(f"abr-bench-solo-{name}")
         _run_one(spark, queries[name], WARMUP_SF_DIR)  # warm codegen/committer
         secs, err = _run_one(spark, queries[name], timed_dir)
         # Small-query fairness (r13, adjudicating the r12 trio): a
@@ -920,17 +933,10 @@ def appendix_main() -> None:
     re-layout outside timed regions, prestaged fixtures, noop sink,
     crash isolation per entry.
     """
-    from amazon_books_review_spark.session import get_session
     from amazon_books_review_spark.plans.catalog import all_queries
     from amazon_books_review_spark.streaming.queries import prestage_inputs
 
-    spark = get_session(
-        app_name="abr-bench-appendix",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-        extra_confs={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("abr-bench-appendix")
     queries = all_queries()
     names = sorted(set(queries) - set(HEADLINE))
 

@@ -77,9 +77,6 @@ def render() -> str:
         in_win = "yes" if driver_name(name) in window else ""
         lines.append(f"| `{name}` | {kind} | {status} | {in_win} |")
     total = len(all_queries())
-    from amazon_books_review_spark.plans.catalog import DRIVER_PIN, _pin_active
-
-    pins = sorted(n for n in DRIVER_PIN if _pin_active(n))
     overflow = sorted(
         n for n in all_queries() if n not in DRIVER_VERIFIED and n not in window
     )
@@ -90,14 +87,9 @@ def render() -> str:
         f"(all pending inside the next round's window: "
         f"{'yes' if not overflow else 'NO'}).",
     ]
-    if pins:
-        lines.append(
-            f"Window pins (forced hard re-verify; see catalog.DRIVER_PINS for each pin's fix round and reason): "
-            + ", ".join(f"`{p}`" for p in pins) + "."
-        )
     if overflow:
         lines.append(
-            "Pin overflow — pending names deferred to the following round "
+            "Window overflow — pending names deferred to the following round "
             "(local-parity green meanwhile): "
             + ", ".join(f"`{p}`" for p in overflow) + "."
         )

@@ -27,7 +27,6 @@ import json
 from pathlib import Path
 
 from amazon_books_review_spark.plans.catalog import (
-    DRIVER_PIN,
     DRIVER_VERIFIED,
     all_oracles,
     all_queries,
@@ -98,7 +97,7 @@ def test_changed_source_evicts_ledger_entry(monkeypatch):
     the source changing, since eviction is exactly hash inequality."""
     import amazon_books_review_spark.plans.catalog as cat
 
-    # pick any currently-verified, non-evicted, unpinned name whose green
+    # pick any currently-verified, non-evicted name whose green
     # row is WITHIN the ledger's horizon — a row greened after the last
     # refresh has no hash entry yet and is trusted by design (see
     # test_green_row_newer_than_ledger_is_trusted), so perturbing the
@@ -106,7 +105,6 @@ def test_changed_source_evicts_ledger_entry(monkeypatch):
     name = next(
         n for n in sorted(cat.DRIVER_VERIFIED)
         if not cat.change_evicted(n)
-        and not cat._pin_active(n)
         and cat.DRIVER_VERIFIED[n] <= cat.VERIFIED_HASHES_ROUND
     )
     assert driver_name(name).startswith("zz_")
@@ -124,7 +122,6 @@ def test_missing_hash_entry_evicts(monkeypatch):
     name = next(
         n for n in sorted(cat.DRIVER_VERIFIED)
         if not cat.change_evicted(n)
-        and not cat._pin_active(n)
         and cat.DRIVER_VERIFIED[n] <= cat.VERIFIED_HASHES_ROUND
     )
     monkeypatch.delitem(cat.VERIFIED_HASHES, name)
@@ -142,7 +139,6 @@ def test_green_row_newer_than_ledger_is_trusted(monkeypatch):
     name = next(
         n for n in sorted(cat.DRIVER_VERIFIED)
         if not cat.change_evicted(n)
-        and not cat._pin_active(n)
         and cat.DRIVER_VERIFIED[n] <= cat.VERIFIED_HASHES_ROUND
     )
     # simulate: this name's green row postdates the ledger, no hash yet
@@ -213,68 +209,17 @@ def test_iteration_order_is_alphabetical():
 def test_unverified_queries_fit_in_driver_window():
     # The driver consumes ITERATION order — assert on the iteration prefix,
     # not a re-sort (re-sorting here is exactly what masked the r3 failure).
-    # ACTIVE DRIVER_PIN entries occupy slots under canonical names even
-    # though verified, so up to len(active pins) unverified names may
-    # overflow to the next round — but ONLY the alphabetical tail, and
-    # every displaced name must still carry a local hard signal (the
-    # oracle-parity suite covers all registered oracles).
-    from amazon_books_review_spark.plans.catalog import _pin_active, all_oracles
-
     window = list(driver_queries())[:WINDOW]
     unverified = [n for n in all_queries() if n not in DRIVER_VERIFIED]
-    pins_active = sorted(n for n in DRIVER_PIN if _pin_active(n))
     assert len(unverified) <= WINDOW, (
         f"{len(unverified)} unverified queries cannot all fit in the "
         f"{WINDOW}-row window — trim additions this round"
     )
     outside = sorted(n for n in unverified if n not in window)
-    assert len(outside) <= len(pins_active), (
+    assert not outside, (
         f"{len(outside)} unverified queries fall outside the driver's "
-        f"{WINDOW}-row window but only {len(pins_active)} active pin "
-        f"slots explain an overflow: {outside}"
+        f"{WINDOW}-row window: {outside}"
     )
-    # overflow must be exactly the alphabetical tail of the pending set
-    expected_tail = sorted(unverified)[len(unverified) - len(outside):]
-    assert outside == expected_tail, (
-        f"window overflow {outside} is not the alphabetical tail "
-        f"{expected_tail} — the rotation is mis-sorting"
-    )
-    # a displaced query must not silently skip ALL verification: it needs
-    # a registered oracle so tests/test_oracle_parity.py DuckDB-checks it
-    # locally every pytest run while it waits for its driver slot.
-    oracles = all_oracles()
-    for name in outside:
-        assert name in oracles, (
-            f"{name} was displaced from the driver window by a pin but has "
-            f"no oracle — it would carry no hard signal at all this round"
-        )
-    for pin in pins_active:
-        assert pin in window, f"pinned query {pin} missing from the window"
-
-
-def test_expired_pins_return_to_rotation():
-    """A pin whose fix round has a recorded green row must be inert —
-    unless the query was since HASH-EVICTED (source changed after its
-    last green round), in which case the canonical name is the
-    change-eviction path doing its job, not a stuck pin."""
-    from amazon_books_review_spark.plans.catalog import (
-        DRIVER_PINS,
-        _pin_active,
-        change_evicted,
-    )
-
-    for name, fixed in DRIVER_PINS.items():
-        rnd = DRIVER_VERIFIED.get(name, -1)
-        if rnd >= fixed:
-            assert not _pin_active(name), (
-                f"{name} verified in r{rnd} >= fix round {fixed} "
-                f"but the pin still holds a window slot"
-            )
-            if not change_evicted(name):
-                assert driver_name(name).startswith("zz_"), name
-        else:
-            assert _pin_active(name), name
-            assert driver_name(name) == name
 
 
 def test_remaining_window_slots_go_to_stalest_verified():
@@ -283,8 +228,7 @@ def test_remaining_window_slots_go_to_stalest_verified():
     rounds_out = [
         DRIVER_VERIFIED[canonical_name(k)]
         for k in list(driver_queries())[WINDOW:]
-        # pin-overflow pending names sit past the window without a
-        # verified round; they are covered by the overflow test above
+        # a pending name past the window fails the test above
         if canonical_name(k) in DRIVER_VERIFIED
     ]
     # every verified name inside the window is at least as stale as any outside
@@ -304,16 +248,9 @@ def test_spark_entry_simulated_driver_window():
     consumed = [k for k, _fn in list(q.items())[:WINDOW]]
     unverified = {n for n in all_queries() if n not in DRIVER_VERIFIED}
     missing = unverified - set(consumed)
-    from amazon_books_review_spark.plans.catalog import _pin_active
-
-    pins_active = {n for n in DRIVER_PIN if _pin_active(n)}
-    assert len(missing) <= len(pins_active) and missing == set(
-        sorted(unverified)[len(unverified) - len(missing):]
-    ), (
+    assert not missing, (
         f"driver would NOT verify these never-verified queries: {sorted(missing)}"
     )
-    for pin in pins_active:
-        assert pin in consumed, f"pinned {pin} not consumed by the driver"
     # Every window entry must carry a hard oracle unless it is on the
     # explicit rows-only allowlist — a new oracle-less registration
     # would otherwise silently consume a hard-gate slot for a weaker

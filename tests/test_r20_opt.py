@@ -5,6 +5,7 @@ declared queries; these are the fast local pins of that contract)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from tests.conftest import SF_SMOKE
 
@@ -26,6 +27,40 @@ def test_kcenter_arrow_arm_matches_distributed_loop(spark):
     finally:
         spark.conf.unset(KC_ARROW_MAX_ROWS_CONF)
     assert arrow == dist
+
+
+@pytest.mark.parametrize("layout", ["nested", "garbage_footer"])
+def test_kcenter_unknown_row_count_takes_distributed_loop(
+    spark, tmp_path, monkeypatch, layout
+):
+    """The Arrow arm is taken only on a footer count it can trust.  A
+    hive-partitioned directory sums to 0 footer rows and a corrupt
+    ``*.parquet`` footer raises ArrowInvalid; both must fall through
+    to the distributed loop and give the flat layout's rows.  (Spark
+    skips ``_``-prefixed files, so the garbage file is invisible to
+    the scan but not to the footer sum.)"""
+    import shutil
+    from pathlib import Path
+
+    from amazon_books_review_spark.plans import scale_ops_queries as sq
+
+    flat = sorted(map(tuple, sq.kcenter_coreset(spark, SF_SMOKE).collect()))
+    src = Path(SF_SMOKE) / "embeddings.parquet"
+    table = tmp_path / "embeddings.parquet"
+    if layout == "nested":
+        (table / "bucket=0").mkdir(parents=True)
+        shutil.copy(src, table / "bucket=0" / "part-0.parquet")
+    else:
+        table.mkdir()
+        shutil.copy(src, table / "part-0.parquet")
+        (table / "_garbage.parquet").write_bytes(b"not a parquet footer")
+
+    def no_arrow(_tbl):
+        raise AssertionError("Arrow arm taken on an unknown row count")
+
+    monkeypatch.setattr(sq, "_kcenter_greedy_driver", no_arrow)
+    got = sorted(map(tuple, sq.kcenter_coreset(spark, str(tmp_path)).collect()))
+    assert got == flat
 
 
 def test_funnel_fusion_matches_composed_form(spark):

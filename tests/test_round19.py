@@ -307,48 +307,54 @@ def test_prefix_probes_guard(spark, emb_df):
 
 
 # ---------------------------------------------------------------------------
-# VERDICT r18 #5/#7/#8: materialize knob, keeper policy, footer count.
+# VERDICT r18 #5/#7/#8: materialization arms, keeper policy, footer count.
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_materialize_modes_row_identical(spark, tmp_path):
-    from amazon_books_review_spark.plans import northstar_queries as nq
+    """``session.materialize`` writes a reliable checkpoint while the
+    session has a checkpoint dir and a local one otherwise; the rows
+    must not depend on which arm ran."""
+    from collections import Counter
 
-    local = {
-        tuple(r)
-        for r in nq.similarity_lsh_knngraph_mutual(
-            spark, SF, materialize="local"
-        ).collect()
-    }
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    from amazon_books_review_spark.plans.graph_queries import (
+        label_propagation_communities,
+    )
+    from amazon_books_review_spark.plans.northstar_queries import (
+        similarity_lsh_knngraph_mutual,
+    )
+    from amazon_books_review_spark.plans.scale_ops_queries import (
+        pagerank_copurchase,
+    )
+
+    queries = (
+        similarity_lsh_knngraph_mutual,
+        label_propagation_communities,
+        pagerank_copurchase,
+    )
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    local = [Counter(tuple(r) for r in q(spark, SF).collect()) for q in queries]
+
+    ckpt = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(ckpt))
+    reliable, written = [], []
     try:
-        reliable = {
-            tuple(r)
-            for r in nq.similarity_lsh_knngraph_mutual(
-                spark, SF, materialize="reliable"
-            ).collect()
-        }
-        # auto resolves to reliable while a checkpoint dir is set
-        auto = {
-            tuple(r)
-            for r in nq.similarity_lsh_knngraph_mutual(
-                spark, SF, materialize="auto"
-            ).collect()
-        }
+        for q in queries:
+            before = {f for f in ckpt.rglob("*") if f.is_file()}
+            reliable.append(Counter(tuple(r) for r in q(spark, SF).collect()))
+            written.append({f for f in ckpt.rglob("*") if f.is_file()} - before)
     finally:
         # unset the session checkpoint dir (Option.apply(null) ->
         # scala None via the var setter) so the session fixture's
-        # later tests keep resolving materialize="auto" to local
-        sc = spark.sparkContext
+        # later tests keep taking the local arm
         none = sc._jvm.scala.Option.apply(None)
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(none)
-    assert local == reliable == auto
-    assert spark.sparkContext.getCheckpointDir() is None
-    with pytest.raises(ValueError, match="materialize"):
-        nq._materialize_once(
-            nq.similarity_lsh_knngraph(spark, SF), "bogus"
-        )
+    assert local == reliable
+    for q, files in zip(queries, written):
+        assert files, f"{q.__name__} wrote nothing under the checkpoint dir"
+    assert sc.getCheckpointDir() is None
 
 
 def test_semdedup_keepers_policy(spark):
