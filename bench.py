@@ -1,48 +1,55 @@
 #!/usr/bin/env python3
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Time catalog entries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE compact JSON line:
+    python bench.py               # the HEADLINE entries
+    python bench.py --appendix    # every other catalog entry
+    python bench.py NAME [NAME ...]
+
+Every mode times through ``time_entries``, in one Spark session sized
+to the host like ``querybench/run.py`` (``SPARK_GRAFT_CPUS`` cores,
+else the CPUs this process may use; driver heap a quarter of
+MemTotal, at most 16g):
+
+1. warm-up: each entry runs once at sf0.001
+   ($SPARK_GRAFT_WARMUP_SF_DIR).  The schemas match the timed scale,
+   so this fills the codegen cache, the noop-sink committer and the
+   broadcast machinery of every plan before its timed run.  An entry
+   that fails here is an error row and is not timed.
+2. re-layout, untimed: querybench's ``relayout`` rewrites every table
+   as contiguous pyarrow slices, ``max(4, cores // 2)`` files each, so
+   rows keep their order.  The source tables are one row group each,
+   and a row group is Spark's smallest split, so without it every scan
+   runs on one task.
+3. ``prestage_inputs``, untimed: the process-cached fixtures (streaming
+   feeds, the warcish container) are staged at the timed scale.
+4. one querybench ``execute`` per entry through the noop sink, which
+   times construction (``construct_s``, including the eager jobs the
+   iterative operators run while building) and the action
+   (``action_s``) apart.  An entry that raises costs one error row.
+
+The headline prints ONE compact JSON line, cut to fit the 2000-char
+stdout tail a driver keeps (``_fit_line``):
     {"metric": "headline_total", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "r03_subset_total": <sec|null>,
-     "n_timed": N, "n_errors": N, "sf": <sf>}
-The full detail (warm-up timings, per-query error strings, smoke
-coverage) is written to BENCH_LOCAL_r{N}.json in the repo root — the
-driver records only the stdout tail, which truncated round 4's
-artifact mid-map.
+     "n_timed": N, "n_errors": N, "sf": <sf>, ...}
+and writes the complete record to BENCH_LOCAL_r{N}.json; the appendix
+writes BENCH_APPENDIX_r{N}.json.  N is one past every existing
+BENCH_r*, BENCH_LOCAL_r* and BENCH_APPENDIX_r* file in the repo
+($SPARK_GRAFT_ROUND overrides it).  Named entries print one JSON line
+each and write no file.
 
-Execution is forced with the noop sink (full pipeline runs, nothing
-collected to the driver), which measures the engine, not result
-transfer.
-
-Methodology (changed round 3 — see PERF.md "bench methodology"):
-every headline query first runs once at sf0.001.  The schemas match
-the target SF, so this pre-pass populates the whole-stage-codegen
-cache, the noop-sink committer, and broadcast machinery for every
-plan — the things a long-lived cluster amortizes across thousands of
-queries.  The timed pass then runs each query once at
-$SPARK_GRAFT_SF_DIR; all data-dependent work (scan, broadcast build,
-shuffle, state store) is inside the timed region.  Without the
-pre-pass the first query in the list absorbs several seconds of
-one-time session machinery (BENCH_r02's flagship "regression" was
-exactly this), which made ordering, not plans, the headline driver.
-The sf0.001 pre-pass timings are reported as ``warmup_sf0001`` so the
-one-shot costs stay visible in the artifact.
-
-Round 11 (VERDICT r10 #1/#2): per-query numbers are now
-regression-gateable.  (a) Process-cached input fixtures (streaming
-feeds, warcish containers) are pre-staged before the timed pass, so
-timed regions measure operators, not fixture I/O.  (b) Any query whose
-session time exceeds its best committed record by >1.5x is re-timed in
-a fresh session and the SOLO number is recorded in ``queries`` (the
-contended one moves to ``contended`` in the detail file) — recorded
-movement now means code, not host contention.  ``r03_subset_total``
-and ``value`` are computed over the substituted map.
+One shot per entry is a single sample: wall times on one host drift
+by 15-30% between sessions.  To compare two versions of the code,
+alternate runs of both (PERF.md "How to A/B").
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import re
+import shutil
 import sys
 import tempfile
 import time
@@ -53,17 +60,6 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# Solo re-times shorter than this get ONE warm re-run (min taken):
-# below it, fresh-session one-shot costs dominate the measurement.
-# 10 (was 3): the r14 bitext-kmeans re-time measured 9.2 s fresh vs
-# 2.0 s warm — a query with several mapInPandas stages pays ~7 s of
-# first-touch Python-worker/Arrow/codegen cost in a fresh session,
-# the same disease the 3 s cutoff was built for at a larger constant.
-# Both shots are recorded in the detail file (solo_shots), so the
-# discarded fresh number stays auditable.
-_SOLO_RERUN_UNDER_SEC = 10.0
-#: Every CPU this process may use, as in querybench/run.py.
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 WARMUP_SF_DIR = os.environ.get(
     "SPARK_GRAFT_WARMUP_SF_DIR",
     os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001"),
@@ -345,501 +341,177 @@ HEADLINE += [
 ]
 
 
-def _run_one(spark, fn, sf_dir: str) -> tuple[float | None, str | None]:
-    """Run one catalog query against sf_dir through the noop sink.
+def _querybench():
+    """``querybench/run.py``, imported on first use so that ``import
+    bench`` stays light for the scripts and tests that only read
+    ``HEADLINE``."""
+    qb_dir = os.path.join(_REPO, "querybench")
+    if qb_dir not in sys.path:
+        sys.path.insert(0, qb_dir)  # run.py imports its sibling modules
+    import run
 
-    Crash isolation (VERDICT r5 #2): one broken query must cost ONE
-    err row, never the whole artifact — BENCH_r05.json was rc=1 with
-    zero timings because a single AnalysisException in the warm-up
-    aborted the process.
-    """
-    t0 = time.perf_counter()
-    try:
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-    except Exception as exc:  # noqa: BLE001 — isolate per query
-        return None, f"{type(exc).__name__}: {exc}"[:300]
-    return round(time.perf_counter() - t0, 3), None
+    return run
 
 
-def _same_sf(recorded, sf_tag: str) -> bool:
-    """sf equality across representations (ADVICE r11): the stored
-    'sf' is a parsed float (1.0) while the tag is the raw dir suffix
-    ('1') — compare numerically when both parse, else as strings."""
-    try:
-        return float(recorded) == float(sf_tag)
-    except (TypeError, ValueError):
-        return str(recorded) == sf_tag
-
-
-def _prior_records(
-    repo: str | None = None,
-    sf_dir: str | None = None,
-    current_hashes: dict[str, str] | None = None,
-    verified_hashes: dict[str, str] | None = None,
-    glob: str = "BENCH_LOCAL_r*.json",
-) -> dict[str, float]:
-    """Per-query best (min) committed time at the CURRENT bench sf,
-    across every prior round's BENCH_LOCAL_r*.json — both the session
-    series and the solo lane.  This is the reference the >1.5x
-    regression gate compares against; min-over-history is robust to
-    contended outliers in any single round.
-
-    Records are CHANGE-AWARE (VERDICT r11 #6, same machinery as the
-    correctness ledger): a record only counts for a query whose
-    implementation hash at record time matches its current
-    ``src_hash``, so a legitimate slowdown from a code change
-    re-baselines instead of being solo-retimed against a stale min
-    forever.  Detail files from r12 on carry a ``src_hashes`` map;
-    older hash-less files are grandfathered ONLY for queries whose
-    current hash still matches the driver-verified ledger.  NOTE
-    (ADVICE r12): that ledger check proves the source is unchanged
-    since the LAST driver verification, not necessarily since the
-    hash-less record was set — a query changed and re-verified
-    between the record round and now would still keep its old
-    record.  Accepted as a bench-only heuristic: the window rotates
-    every query through re-verification, and any such stale min can
-    only make the regression gate MORE sensitive (extra solo
-    re-times), never hide a regression.
-    """
-    if current_hashes is None or verified_hashes is None:
-        from amazon_books_review_spark.plans.catalog import (
-            VERIFIED_HASHES,
-            _REGISTRY,
-            all_queries,
-        )
-
-        all_queries()  # the registry populates lazily — force the load
-        if current_hashes is None:
-            current_hashes = {n: e.src_hash for n, e in _REGISTRY.items()}
-        if verified_hashes is None:
-            verified_hashes = dict(VERIFIED_HASHES)
-
-    def _record_ok(name: str, recorded_hashes: dict | None) -> bool:
-        cur = current_hashes.get(name)
-        if cur is None:
-            return True  # not a catalog entry (defensive): keep old behavior
-        if recorded_hashes is not None:
-            rec_hash = recorded_hashes.get(name)
-            return rec_hash is None or rec_hash == cur
-        # hash-less history: trust it only if the source hasn't
-        # changed since the last driver-verified tree
-        return verified_hashes.get(name) == cur
-
-    rec: dict[str, float] = {}
-    sf_tag = (sf_dir or SF_DIR).rstrip("/").rsplit("sf", 1)[-1]
-    for p in sorted(Path(repo or _REPO).glob(glob)):
-        try:
-            d = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        if not _same_sf(d.get("sf"), sf_tag):
-            continue
-        recorded_hashes = d.get("src_hashes")
-        for series in (d.get("queries"), d.get("solo_retimed")):
-            for k, v in (series or {}).items():
-                if not isinstance(v, (int, float)):
-                    continue
-                if not _record_ok(k, recorded_hashes):
-                    continue
-                if k not in rec or v < rec[k]:
-                    rec[k] = float(v)
-    return rec
-
-
-def _optimize_layout(spark) -> tuple[str, float]:
-    """One-time ingest layout normalization, run OUTSIDE every timed
-    region (r12; PERF.md 'synthesis validation, Finding 2').
-
-    The driver's sf tables are each ONE parquet file with ONE row
-    group, and a row group is Spark's minimum split — so every scan
-    stage in the bench runs on a single task no matter how many cores
-    the session has (measured: gopher_repetition_rules 7.1 s on the
-    raw file vs 2.6 s after re-layout, same query, same data).  No
-    deployment queries a raw drop zone directly: data lands through
-    an ingest/OPTIMIZE pass (`sources/maintenance.py` is this
-    engine's OPTIMIZE; `compaction_bin_packing` its planning
-    operator).  This helper is that step applied once per bench run —
-    read each table, repartition to the session's cores, rewrite to a
-    tmp dir — and its cost is reported separately in the detail file
-    (`ingest_optimize_sec`), never folded into a query time.  The
-    correctness gate is untouched: the driver runs queries()/
-    oracle_sql() against the raw dirs.
-
-    Set SPARK_GRAFT_RAW_LAYOUT=1 to benchmark against the raw
-    single-row-group files instead.
-    """
-    from amazon_books_review_spark.sources.io import TESTDATA_TABLES
-
-    dst = os.path.join(
-        tempfile.gettempdir(), f"abr_bench_opt_{os.getpid()}"
-    )
-    # CPUS/2 splits, floor 4: a measured sweet spot — CPU-heavy doc
-    # scans keep their full re-layout speedup (gopher 1.87s at 16
-    # splits vs 1.86s at 32) while the per-scan constant every SMALL
-    # query pays (listing + footer reads + task launch, x files)
-    # halves (8-query probe total: raw 11.9s / 16 splits 6.0s /
-    # 32 splits 6.8s).
-    parts = max(4, CPUS // 2)
-    t0 = time.perf_counter()
-    for t in TESTDATA_TABLES:
-        (
-            spark.read.parquet(os.path.join(SF_DIR, f"{t}.parquet"))
-            .repartition(parts)
-            .write.mode("overwrite")
-            .parquet(os.path.join(dst, f"{t}.parquet"))
-        )
-    return dst, round(time.perf_counter() - t0, 3)
-
-
-def _net_of_floor(
-    timings: dict[str, float],
-    streaming_floor: float,
-    solo_floors: dict[str, float] | None = None,
-) -> dict[str, float]:
-    """Floor-subtracted streaming entries (VERDICT r12 #7 / r14 #7).
-
-    Solo-retimed streaming queries ran in their own fresh session, so
-    their net subtracts the floor measured IN that session
-    (``solo_floors``) rather than the main warm-session figure — a
-    fresh-session floor is materially higher (~1.1 s cold vs ~0.4 s
-    warm, PERF.md) and subtracting the warm one would overstate the
-    operator cost exactly for the entries the gate flagged.  A solo
-    floor of 0.0 (measurement failed) falls back to the session floor.
-    """
-    solo_floors = solo_floors or {}
-    return {
-        n: round(max(0.0, t - (solo_floors.get(n) or streaming_floor)), 3)
-        for n, t in timings.items()
-        if n.startswith("streaming_")
-    }
-
-
-def _measure_streaming_floor(spark) -> float:
-    """Warm-session availableNow machinery floor (VERDICT r12 #7).
-
-    A fresh-checkpoint drain of a 1-row parquet input in the CURRENT
-    (warm) session — the ``second_query_cold`` point of
-    ``scripts/streaming_floor.py``: what every ``streaming_*`` bench
-    entry pays in offset-log / file-listing / checkpoint-commit / sink
-    bookkeeping before any operator work.  Measured untimed each bench
-    run so the detail file can report ``net_of_floor`` per streaming
-    query without solo re-times.  Solo-retimed streaming entries run
-    in their own fresh sessions, where this warm-session floor would
-    understate the machinery cost — the solo lane measures the floor
-    IN ITS OWN SESSION per streaming entry (``solo_streaming_floors``)
-    and ``_net_of_floor`` keys on that figure instead (VERDICT r14 #7).
-    """
-    import shutil
-
-    from amazon_books_review_spark.sources.io import (
-        read_stream_parquet,
-        write_stream,
-    )
-
-    root = tempfile.mkdtemp(prefix="abr_bench_floor_")
-    try:
-        src = os.path.join(root, "src")
-        spark.range(1).selectExpr(
-            "id", "CAST(id AS STRING) AS v"
-        ).write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        t0 = time.perf_counter()
-        q = write_stream(
-            read_stream_parquet(spark, src, schema),
-            os.path.join(root, "sink"),
-            os.path.join(root, "ckpt"),
-            query_name="bench_floor",
-        )
-        q.awaitTermination()
-        return round(time.perf_counter() - t0, 3)
-    except Exception:  # noqa: BLE001 — floor is advisory, never fatal
-        return 0.0
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _entry_hash(name: str) -> str | None:
-    """Current src_hash of a catalog entry (None for non-catalog
-    names), for the change-aware record keying in detail files."""
-    from amazon_books_review_spark.plans.catalog import _REGISTRY
-
-    entry = _REGISTRY.get(name)
-    return entry.src_hash if entry is not None else None
-
-
-def _next_round() -> int:
-    """Infer the current round from committed BENCH_r*.json artifacts
-    (overridable with $SPARK_GRAFT_ROUND) for the local detail file."""
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    rounds = [0]
-    for p in Path(_REPO).glob("BENCH_r*.json"):
-        try:
-            rounds.append(int(p.stem.split("_r")[-1]))
-        except ValueError:
-            pass
-    return max(rounds) + 1
-
-
-def _driver_memory() -> str:
-    """A quarter of MemTotal, at most 16g, as in querybench/run.py: the
-    JVM heap is the whole local-mode cluster, the Python workers need
-    the rest."""
-    with open("/proc/meminfo") as f:
-        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
-    return f"{min(16384, kb // 4096)}m"
-
-
-def _session(app_name: str):
+def session(app_name: str):
+    """A Spark session sized like querybench's: every host core, and a
+    quarter of the host's memory for the driver heap."""
     from amazon_books_review_spark.session import get_session
 
+    qb = _querybench()
+    cores = qb.host_cores()
     spark = get_session(
         app_name=app_name,
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
+        master=f"local[{cores}]",
+        shuffle_partitions=cores,
         extra_confs={
             "spark.ui.enabled": "false",
-            "spark.driver.memory": _driver_memory(),
+            "spark.driver.memory": f"{qb.driver_memory_mb(qb.mem_total_mb())}m",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
 
-def main() -> None:
+def relayout(sf_dir: str, dst: str) -> None:
+    """querybench's ingest re-layout of ``sf_dir`` into ``dst``, with
+    ``max(4, cores // 2)`` files per table.  Half the cores was measured
+    as the sweet spot: CPU-heavy document scans keep their full
+    speed-up (gopher 1.87 s at 16 splits vs 1.86 s at 32), while the
+    per-file cost every small query pays (listing, footer reads, task
+    launch) halves (8-query probe: raw 11.9 s, 16 splits 6.0 s,
+    32 splits 6.8 s)."""
+    qb = _querybench()
+    qb.relayout(Path(sf_dir), Path(dst), max(4, qb.host_cores() // 2))
+
+
+def time_entries(spark, names, sf_dir: str) -> dict:
+    """Time each catalog entry in ``names`` once at ``sf_dir``.
+
+    Steps as in the module docstring: sf0.001 warm-up of every entry,
+    re-layout, ``prestage_inputs``, one ``execute`` per entry.  Returns
+    ``rows`` (name -> ``{"secs", "construct_s", "action_s"}``, or
+    ``{"error", "phase"}`` for an entry that raised), the warm-up
+    seconds, and the untimed ``layout_s`` and ``prestage_s``.
+    """
     from amazon_books_review_spark.plans.catalog import all_queries
-
-    spark = _session("abr-bench")
-    queries = all_queries()
-
-    # Warm up the JVM + file listing with one tiny action.
-    spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
-
-    # Pre-pass: run EVERY catalog plan once at sf0.001.  For the
-    # headline set this warms codegen/committer/broadcast machinery for
-    # the timed pass (see module docstring); for the rest it is a
-    # whole-catalog runnable smoke — env drift like the r5 NTZ change
-    # surfaces here as err rows in the committed artifact instead of
-    # silently waiting for its re-check window (VERDICT r5 "What's
-    # wrong" #3).
-    warmup: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    smoke_order = HEADLINE + sorted(set(queries) - set(HEADLINE))
-    for name in smoke_order:
-        secs, err = _run_one(spark, queries[name], WARMUP_SF_DIR)
-        if err is not None:
-            errors[name] = err
-        else:
-            warmup[name] = secs
-
-    # One-time ingest layout normalization (untimed; see
-    # _optimize_layout): the raw single-row-group files serialize
-    # every scan stage to one task.
-    if os.environ.get("SPARK_GRAFT_RAW_LAYOUT") == "1":
-        timed_dir, optimize_sec = SF_DIR, 0.0
-    else:
-        timed_dir, optimize_sec = _optimize_layout(spark)
-        # ADVICE r12: the success path removes this tree at the end of
-        # main(); register cleanup so an exception mid-bench doesn't
-        # leak a full sf copy into /tmp.
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, timed_dir, ignore_errors=True)
-
-    # Pre-stage every process-cached input fixture at the TIMED sf
-    # (streaming feeds, the warcish container write) so the timed
-    # region below measures the operator, not fixture staging — the
-    # r10 outer-join headline was 15.6s recorded / 5.6s solo, and the
-    # 10s gap was mostly an events-table write inside the timed region
-    # (VERDICT r10 #2).  The warm-up pass above only staged the
-    # WARMUP_SF_DIR copies.
     from amazon_books_review_spark.streaming.queries import prestage_inputs
 
-    prestage_inputs(spark, timed_dir)
-
-    # Untimed: warm-session streaming machinery floor, for the
-    # detail file's net_of_floor column (VERDICT r12 #7).
-    streaming_floor = _measure_streaming_floor(spark)
-
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        secs, err = _run_one(spark, queries[name], timed_dir)
-        if err is not None:
-            errors.setdefault(name, err)
+    qb = _querybench()
+    queries = all_queries()
+    rows: dict[str, dict] = {}
+    warmup: dict[str, float] = {}
+    for name in names:
+        if name not in queries:
+            rows[name] = {"error": "KeyError: not a catalog entry", "phase": "warm-up"}
+            continue
+        ex, _ = qb.execute(spark, name, queries[name], WARMUP_SF_DIR, 0)
+        if ex.error is not None:
+            rows[name] = {"error": ex.error, "phase": "warm-up"}
         else:
-            timings[name] = secs
+            warmup[name] = round(ex.latency_s, 3)
 
-    # Regression-gated de-contention pass (VERDICT r10 #1, upgrading
-    # r9 #2's slowest-N lane): the single-session sweep inflates the
-    # slow tail up to 4x with host/self contention (pagerank 12.0s
-    # recorded vs 5.05s solo in r10), which burned three rounds of
-    # verdict effort on phantom regressions.  Any query whose session
-    # time exceeds its best prior committed record by >1.5x — plus any
-    # new entrant slower than 2s (no record yet) — is re-timed in a
-    # FRESH session (new SparkContext: clean block manager, shuffle
-    # dirs, GC state) with its own sf0.001 warm-up, and the SOLO
-    # number becomes the recorded `queries` figure; the contended
-    # session time is kept in `contended` (detail file).  Per-query
-    # movement is therefore regression-gateable directly on `queries`.
-    records = _prior_records()
-    ratio = float(os.environ.get("SPARK_GRAFT_SOLO_RATIO", "1.5"))
-    # 60 (was 40, was 25): a systematically slow sweep (host variance)
-    # marks MANY marginal entries suspect at once — an r14 run consumed
-    # all 40 slots and left two 1.56x entries un-retimed; the lane is
-    # ~15 s per query, so the wider cap costs ~5 min worst-case and
-    # closes the gate's blind spot.
-    solo_max = int(os.environ.get("SPARK_GRAFT_SOLO_MAX", "60"))
-    new_entrant_floor = 2.0
+    laid = tempfile.mkdtemp(prefix="abr_bench_layout_")
+    try:
+        t = time.perf_counter()
+        relayout(sf_dir, laid)
+        layout_s = time.perf_counter() - t
+        t = time.perf_counter()
+        prestage_inputs(spark, laid)
+        prestage_s = time.perf_counter() - t
+        for name in names:
+            if name in rows:
+                continue
+            ex, _ = qb.execute(spark, name, queries[name], laid, 1)
+            if ex.error is not None:
+                rows[name] = {"error": ex.error, "phase": "timed"}
+            else:
+                rows[name] = {
+                    "secs": round(ex.latency_s, 3),
+                    "construct_s": round(ex.construct_s, 3),
+                    "action_s": round(ex.action_s, 3),
+                }
+    finally:
+        shutil.rmtree(laid, ignore_errors=True)
+    return {
+        "rows": rows,
+        "warmup_sf0001": warmup,
+        "layout_s": round(layout_s, 3),
+        "prestage_s": round(prestage_s, 3),
+    }
 
-    def _excess(name: str) -> float:
-        rec = records.get(name)
-        if rec is None:
-            return timings[name] / new_entrant_floor
-        return timings[name] / (ratio * rec)
 
-    suspects = sorted(
-        (n for n in timings if _excess(n) > 1.0), key=_excess, reverse=True
-    )[:solo_max]
-    solo: dict[str, float] = {}
-    contended: dict[str, float] = {}
-    # name -> {"fresh": s, "warm": s} for the min-of-two short-query
-    # lane, so the shot min() discards stays auditable (ADVICE r13)
-    solo_shots: dict[str, dict[str, float]] = {}
-    # streaming_* entries re-timed solo pay a FRESH-session availableNow
-    # floor; stamp it per solo session so net_of_floor stays honest
-    solo_floors: dict[str, float] = {}
-    for name in suspects:
-        spark.stop()
-        spark = _session(f"abr-bench-solo-{name}")
-        _run_one(spark, queries[name], WARMUP_SF_DIR)  # warm codegen/committer
-        secs, err = _run_one(spark, queries[name], timed_dir)
-        # Small-query fairness (r13, adjudicating the r12 trio): a
-        # single fresh-session shot carries first-time sf listing /
-        # footer reads / broadcast build — ~0.5-1 s of one-shot cost
-        # that dwarfs a sub-second query and inflated
-        # hll_distinct_audit 0.47->1.28 s while a warm re-run sits at
-        # record (bisect: the d6ce745 re-layout itself costs <=0.13 s
-        # on these scans).  For short runs, re-run once warm and take
-        # the min — bounded extra cost (< threshold) and the solo
-        # number measures the operator, not session cold-start.
-        if err is None and secs is not None and secs < _SOLO_RERUN_UNDER_SEC:
-            secs2, err2 = _run_one(spark, queries[name], timed_dir)
-            if err2 is None and secs2 is not None:
-                # Keep BOTH shots auditable (ADVICE r13): min() hides a
-                # genuine first-touch regression from the gate, so the
-                # discarded number goes to the detail file.
-                solo_shots[name] = {"fresh": secs, "warm": secs2}
-                secs = min(secs, secs2)
-        if err is None:
-            solo[name] = secs
-            contended[name] = timings[name]
-            # The solo lane exists to EXONERATE session-contended
-            # entries; when the fresh-session shot comes out SLOWER
-            # than the in-session figure (r15: doc_chunk_windows
-            # 0.306 solo vs 0.208 in-session, a sub-second query
-            # paying fresh-session first-touch), substituting it
-            # would manufacture a regression out of two legitimate
-            # measurements.  The record is the min; both figures
-            # stay in the detail file (solo_retimed/contended).
-            # Pair floor with the measurement that WINS the min (ADVICE
-            # r15): when the warm in-session figure is kept, stamping
-            # the solo-session floor against it would net a floor the
-            # kept measurement never paid.
-            solo_won = secs <= timings[name]
-            timings[name] = min(secs, timings[name])
-            if name.startswith("streaming_") and solo_won:
-                # the floor this entry actually paid: measured in the
-                # SAME solo session, after the query warmed it
-                solo_floors[name] = _measure_streaming_floor(spark)
+def _next_round(repo: str = _REPO) -> int:
+    """One past the highest round of any BENCH_r*, BENCH_LOCAL_r* or
+    BENCH_APPENDIX_r* file in ``repo`` ($SPARK_GRAFT_ROUND overrides
+    it), so a new detail file never overwrites a committed one."""
+    env = os.environ.get("SPARK_GRAFT_ROUND")
+    if env:
+        return int(env)
+    pattern = re.compile(r"BENCH_(?:LOCAL_|APPENDIX_)?r(\d+)\.json")
+    rounds = [0]
+    for p in Path(repo).iterdir():
+        m = pattern.fullmatch(p.name)
+        if m:
+            rounds.append(int(m.group(1)))
+    return max(rounds) + 1
 
+
+def _sf_value() -> float | str:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
-        sf_val: float | str = float(sf)
+        return float(sf)
     except ValueError:
-        sf_val = sf
-    r03_missing = [n for n in R03_SET if n not in timings]
-    summary = {
-        "metric": "headline_total",
+        return sf
+
+
+def _record(metric: str, run: dict) -> dict:
+    """The detail-file record of one ``time_entries`` run."""
+    rows = run["rows"]
+    timings = {n: r["secs"] for n, r in rows.items() if "secs" in r}
+    errors = {n: r["error"] for n, r in rows.items() if "error" in r}
+    qb = _querybench()
+    return {
+        "metric": metric,
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        # apples-to-apples with BENCH_r03.json (same 24 queries);
-        # None when any member errored — a shrunken sum would read as
-        # a speedup (ADVICE r4 #3).
-        "r03_subset_total": (
-            round(sum(timings[n] for n in R03_SET), 3)
-            if not r03_missing
-            else None
-        ),
         "n_timed": len(timings),
         "n_errors": len(errors),
-        # regression-gate substitutions: these names' `queries` values
-        # ARE the solo re-times (fresh session each); their contended
-        # session times are in `contended` in the detail file.
-        "solo_retimed": solo,
-        "sf": sf_val,
-        # untimed one-shot ingest re-layout (row-group split rescue);
-        # 0.0 when SPARK_GRAFT_RAW_LAYOUT=1 times the raw files
-        "ingest_optimize_sec": optimize_sec,
+        "sf": _sf_value(),
+        "errors": errors,
+        "entries": rows,
+        "warmup_sf0001": run["warmup_sf0001"],
+        "layout_s": run["layout_s"],
+        "prestage_s": run["prestage_s"],
+        "cores": qb.host_cores(),
+        "driver_memory_mb": qb.driver_memory_mb(qb.mem_total_mb()),
     }
-    # Full detail (warm-up map, error strings, smoke coverage) goes to
-    # a committed file: the driver keeps only the stdout TAIL, which
-    # truncated r4's artifact — stdout gets the compact line only.
-    detail = dict(summary)
-    detail.update(
-        {
-            "warmup_sf0001": warmup,
-            "errors": errors,
-            "r03_subset_missing": r03_missing,
-            "smoke_catalog_size": len(smoke_order),
-            "contended": contended,
-            # both shots of the min-of-two short-query solo lane — the
-            # min is the record, the discarded shot stays auditable
-            "solo_shots": solo_shots,
-            "regression_gate": {
-                "ratio": ratio,
-                "new_entrant_floor_sec": new_entrant_floor,
-                "n_records": len(records),
-            },
-            # change-aware record keying (VERDICT r11 #6): future
-            # _prior_records() runs only accept this file's numbers
-            # for queries whose implementation hash still matches.
-            "src_hashes": {
-                n: _entry_hash(n) for n in timings if _entry_hash(n)
-            },
-            # one-time untimed ingest re-layout cost (0.0 = disabled
-            # via SPARK_GRAFT_RAW_LAYOUT; see _optimize_layout)
-            "ingest_optimize_sec": optimize_sec,
-            # VERDICT r12 #7: warm-session availableNow machinery
-            # floor and floor-subtracted streaming entries, so
-            # operator-cost regressions in streaming_* are visible
-            # without solo re-times (floor 0.0 = measurement failed;
-            # net equals gross then).
-            "streaming_floor_sec": streaming_floor,
-            # per-solo-session floors for solo-retimed streaming
-            # entries (VERDICT r14 #7); _net_of_floor keys on these
-            "solo_streaming_floors": solo_floors,
-            "net_of_floor": _net_of_floor(timings, streaming_floor, solo_floors),
-        }
-    )
-    local_path = Path(_REPO) / f"BENCH_LOCAL_r{_next_round():02d}.json"
-    local_path.write_text(json.dumps(detail, indent=1) + "\n")
-    # The driver keeps only the LAST 2000 chars of stdout and parses the
-    # final line as JSON — a full 129-query map overflows that window,
-    # which is why BENCH_r04..r08 all recorded ``parsed: None``.  Emit a
-    # line that provably fits: the r03-comparable subset per-query, the
-    # remainder by slowest-first until the budget is spent, the rest as
-    # one aggregated bucket.  BENCH_LOCAL_r{N}.json (committed) always
-    # carries the complete map.
-    print(json.dumps(_fit_line(summary, timings)))
-    if timed_dir != SF_DIR:
-        import shutil
 
-        shutil.rmtree(timed_dir, ignore_errors=True)
-    spark.stop()
+
+def main() -> None:
+    spark = session("abr-bench")
+    try:
+        detail = _record("headline_total", time_entries(spark, HEADLINE, SF_DIR))
+    finally:
+        spark.stop()
+    timings = detail["queries"]
+    r03_missing = [n for n in R03_SET if n not in timings]
+    # None when any member errored: a shrunken sum would read as a
+    # speed-up
+    detail["r03_subset_total"] = (
+        round(sum(timings[n] for n in R03_SET), 3) if not r03_missing else None
+    )
+    detail["r03_subset_missing"] = r03_missing
+    path = Path(_REPO) / f"BENCH_LOCAL_r{_next_round():02d}.json"
+    path.write_text(json.dumps(detail, indent=1) + "\n")
+    summary = {
+        k: detail[k]
+        for k in ("metric", "value", "unit", "queries", "r03_subset_total",
+                  "n_timed", "n_errors", "sf")
+    }
+    summary["queries_detail_file"] = path.name
+    print(json.dumps(_fit_line(summary, timings)))
 
 
 _LINE_BUDGET = 1900  # headroom under the driver's 2000-char tail window
@@ -850,38 +522,13 @@ def _fit_line(summary: dict, timings: dict[str, float]) -> dict:
     driver's tail window.  Keeps the r03-comparable series intact
     (cross-round per-query grading), then the slowest others, and
     folds whatever remains into ``queries_other_total`` with an
-    explicit count — never a silent drop.
-
-    r20 (VERDICT r19 #1 — a measurement-bug fix, not a methodology
-    change): ``queries`` is budgeted FIRST.  The r18/r19 lines packed
-    the full ``solo_retimed`` map into the budget before fitting
-    ``queries``; on a drifted box (60 solo re-times) that alone
-    overflowed the 1900-char budget, the last-ditch branch emptied
-    ``queries``, and the driver's PERF comparison got n_common=0 with
-    a null geomean two rounds running.  Now the solo map is emptied
-    up front, ``queries`` is packed exactly as before, and
-    ``solo_retimed`` is refilled slowest-first with whatever budget
-    REMAINS (count of dropped entries in ``solo_retimed_omitted``).
-    The complete solo map always lives in the detail file; per-query
-    ``queries`` values are unchanged — same numbers, same timed
-    action, only the line's field priority moved."""
+    explicit count — never a silent drop."""
     compact = dict(summary)
-    solo_full = {
-        n: t
-        for n, t in (summary.get("solo_retimed") or {}).items()
-        if isinstance(t, (int, float))
-    }
-    compact["solo_retimed"] = {}
-    compact["n_solo_retimed"] = len(solo_full)
-    # placeholder so the queries-fitting trials below account for the
-    # field's bytes; the real value is recomputed after the refill
-    compact["solo_retimed_omitted"] = len(solo_full)
     keep = {n: t for n, t in timings.items() if n in R03_SET}
     rest = sorted(
         ((n, t) for n, t in timings.items() if n not in R03_SET),
         key=lambda kv: -kv[1],
     )
-    compact["queries_detail_file"] = "BENCH_LOCAL_r{:02d}.json".format(_next_round())
     for n, t in rest:
         trial = dict(compact)
         trial["queries"] = {**keep, n: t}
@@ -901,140 +548,65 @@ def _fit_line(summary: dict, timings: dict[str, float]) -> dict:
         compact["queries"] = {}
         compact["queries_omitted"] = len(timings)
         compact["queries_other_total"] = round(sum(timings.values()), 3)
-    # refill solo_retimed slowest-first with the budget LEFT OVER after
-    # the queries map is packed — never before it (VERDICT r19 #1)
-    solo_keep: dict[str, float] = {}
-    for n, t in sorted(solo_full.items(), key=lambda kv: -kv[1]):
-        trial = dict(compact)
-        trial["solo_retimed"] = {**solo_keep, n: t}
-        trial["solo_retimed_omitted"] = len(solo_full) - len(trial["solo_retimed"])
-        if len(json.dumps(trial)) > _LINE_BUDGET:
-            break
-        solo_keep[n] = t
-    compact["solo_retimed"] = solo_keep
-    compact["solo_retimed_omitted"] = len(solo_full) - len(solo_keep)
     return compact
 
 
 def appendix_main() -> None:
-    """One-shot timing pass over every catalog entry NOT in HEADLINE
-    (VERDICT r15 #7): the 2x-record regression gate only guards what
-    gets timed, and ~50 entries (early sub-second shapes, deliberate
-    Python-boundary demos, quadratic audit harnesses) had never had a
-    recorded number.  This lane records them WITHOUT joining the
-    headline: BENCH_APPENDIX_r{N}.json carries min-of-(fresh, warm)
-    per entry plus src_hashes, so a future round can see whether a
-    non-headline entry moved.  Deliberately excluded-from-headline
-    entries (the quadratic exact arms) are timed here too — at bench
-    sf they are small (5k docs / 2k embeddings), and the point of the
-    appendix is transparency, not endorsement of their scale path.
-
-    Methodology matches main(): sf0.001 warm-up per entry, ingest
-    re-layout outside timed regions, prestaged fixtures, noop sink,
-    crash isolation per entry.
-    """
+    """Time every catalog entry NOT in HEADLINE, so that every entry
+    has a recorded timing (tests/test_r16_artifacts.py).  This includes
+    the entries kept out of the headline on purpose: the quadratic
+    exact and audit arms are small at bench scale, and the point is
+    that their movement stays visible, not that they scale."""
     from amazon_books_review_spark.plans.catalog import all_queries
-    from amazon_books_review_spark.streaming.queries import prestage_inputs
 
-    spark = _session("abr-bench-appendix")
-    queries = all_queries()
-    names = sorted(set(queries) - set(HEADLINE))
-
-    spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
-    warmup: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in names:
-        secs, err = _run_one(spark, queries[name], WARMUP_SF_DIR)
-        if err is not None:
-            errors[name] = err
-        else:
-            warmup[name] = secs
-
-    if os.environ.get("SPARK_GRAFT_RAW_LAYOUT") == "1":
-        timed_dir, optimize_sec = SF_DIR, 0.0
-    else:
-        timed_dir, optimize_sec = _optimize_layout(spark)
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, timed_dir, ignore_errors=True)
-    prestage_inputs(spark, timed_dir)
-
-    timings: dict[str, float] = {}
-    shots: dict[str, dict[str, float]] = {}
-    for name in names:
-        if name in errors:
-            continue
-        secs, err = _run_one(spark, queries[name], timed_dir)
-        if err is not None:
-            errors[name] = err
-            continue
-        # warm re-run, min-of-two: appendix entries are mostly
-        # sub-second, where the first shot carries footer-read /
-        # codegen first-touch; both shots stay auditable
-        secs2, err2 = _run_one(spark, queries[name], timed_dir)
-        if err2 is None and secs2 is not None:
-            shots[name] = {"first": secs, "second": secs2}
-            secs = min(secs, secs2)
-        timings[name] = secs
-
-    # Transparency companion to the headline lane's regression gate
-    # (VERDICT r15 #3 "the gate only guards what it times"): compare
-    # against the best prior APPENDIX record (change-aware via
-    # src_hashes, same machinery) and surface >2x entries in the
-    # detail file.  No solo re-time lane here — appendix entries are
-    # not headline-graded; the report exists so movement is VISIBLE.
-    records = _prior_records(glob="BENCH_APPENDIX_r*.json")
-    over_2x = {
-        n: {"now": t, "best": records[n]}
-        for n, t in timings.items()
-        if n in records and t > 2.0 * records[n]
-    }
-
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    names = sorted(set(all_queries()) - set(HEADLINE))
+    spark = session("abr-bench-appendix")
     try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
-    detail = {
-        "metric": "appendix_total",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "n_timed": len(timings),
-        "n_errors": len(errors),
-        "sf": sf_val,
-        "ingest_optimize_sec": optimize_sec,
-        "warmup_sf0001": warmup,
-        "errors": errors,
-        "shots": shots,
-        "over_2x_record": over_2x,
-        "n_prior_records": len(records),
-        "src_hashes": {n: _entry_hash(n) for n in timings if _entry_hash(n)},
-        "note": (
-            "non-HEADLINE catalog entries; includes the deliberately "
-            "headline-excluded quadratic exact/audit arms "
-            "(dedup_ngram_jaccard, *_recall_audit exact tiers, "
-            "bitext_margin_mining, embedding_neardup_pairs) and "
-            "Python-boundary demos (doc_chunk_windows_udtf)"
-        ),
-    }
+        detail = _record("appendix_total", time_entries(spark, names, SF_DIR))
+    finally:
+        spark.stop()
+    detail["note"] = (
+        "non-HEADLINE catalog entries; includes the deliberately "
+        "headline-excluded quadratic exact/audit arms "
+        "(dedup_ngram_jaccard, *_recall_audit exact tiers, "
+        "bitext_margin_mining, embedding_neardup_pairs) and "
+        "Python-boundary demos (doc_chunk_windows_udtf)"
+    )
     path = Path(_REPO) / f"BENCH_APPENDIX_r{_next_round():02d}.json"
     path.write_text(json.dumps(detail, indent=1) + "\n")
     print(json.dumps({
-        "metric": "appendix_total",
-        "value": detail["value"],
-        "unit": "sec",
-        "n_timed": len(timings),
-        "n_errors": len(errors),
-        "sf": sf_val,
-        "detail_file": path.name,
-    }))
-    spark.stop()
+        k: detail[k] for k in ("metric", "value", "unit", "n_timed", "n_errors", "sf")
+    } | {"detail_file": path.name}))
+
+
+def named_main(names: list[str]) -> None:
+    """Time the named entries; one JSON line each, no file."""
+    from amazon_books_review_spark.plans.catalog import all_queries
+
+    unknown = sorted(set(names) - set(all_queries()))
+    if unknown:
+        sys.exit(f"unknown catalog entries: {unknown}")
+    spark = session("abr-bench-named")
+    try:
+        run = time_entries(spark, names, SF_DIR)
+    finally:
+        spark.stop()
+    for name in names:
+        print(json.dumps({"query": name, **run["rows"][name]}))
 
 
 if __name__ == "__main__":
-    if "--appendix" in sys.argv[1:]:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--appendix", action="store_true",
+                    help="time every catalog entry outside HEADLINE")
+    ap.add_argument("names", nargs="*", metavar="NAME",
+                    help="time only these catalog entries")
+    args = ap.parse_args()
+    if args.appendix and args.names:
+        ap.error("--appendix takes no entry names")
+    if args.appendix:
         appendix_main()
+    elif args.names:
+        named_main(args.names)
     else:
         main()

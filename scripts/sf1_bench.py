@@ -2,8 +2,9 @@
 """True-sf1 benchmark with generator-fidelity validation (VERDICT r12
 #6).
 
-Three timed points per query, one warm local[32] session, min of two
-runs each (noop sink, same methodology as bench.py):
+Three timed points per query, each one ``bench.time_entries`` run in
+one host-sized session (sf0.001 warm-up, re-layout, prestaged
+fixtures, one noop-sink execution per entry):
 
 - real sf0.1 (/root/testdata/sf0.1) — the trusted reference;
 - gen sf0.1 (scripts/gen_sf.py at sf=0.1) — generator fidelity:
@@ -13,9 +14,9 @@ runs each (noop sink, same methodology as bench.py):
   scale ratio, comparable against the synthesis-based 10x curves in
   PERF.md.
 
-Queries: the 15 slowest batch entries of BENCH_LOCAL_r12 (streaming
-entries excluded — their cost is floor + fixture staging, measured
-separately by the net-of-floor bench column).
+Queries: the 15 slowest batch entries of BENCH_LOCAL_r12 plus the
+entries later rounds added (streaming entries excluded — their cost is
+machinery and fixture staging, not data volume).
 
 Usage:
     python scripts/gen_sf.py 0.1 /tmp/abr_gen_sf0.1
@@ -33,7 +34,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parents[1])
@@ -43,8 +43,6 @@ if _REPO not in sys.path:
 REAL_01 = "/root/testdata/sf0.1"
 GEN_01 = os.environ.get("SPARK_GRAFT_GEN01", "/tmp/abr_gen_sf0.1")
 GEN_1 = os.environ.get("SPARK_GRAFT_GEN1", "/tmp/abr_gen_sf1")
-WARMUP = "/root/testdata/sf0.001"
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 QUERIES = [
     "label_propagation_communities",
@@ -111,53 +109,40 @@ if ONLY:
 
 
 def main() -> None:
-    from amazon_books_review_spark.plans.catalog import all_queries
-    from amazon_books_review_spark.session import get_session
+    import bench
 
-    spark = get_session(
-        app_name="abr-sf1-bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-        extra_confs={"spark.ui.enabled": "false", "spark.driver.memory": "24g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries()
-
-    def run(name: str, sf_dir: str) -> float:
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            secs = time.perf_counter() - t0
-            best = secs if best is None else min(best, secs)
-        return round(best, 3)
+    spark = bench.session("abr-sf1-bench")
+    try:
+        points = {
+            key: bench.time_entries(spark, QUERIES, sf_dir)["rows"]
+            for key, sf_dir in (("real_sf0.1_sec", REAL_01),
+                                ("gen_sf0.1_sec", GEN_01),
+                                ("gen_sf1_sec", GEN_1))
+        }
+    finally:
+        spark.stop()
 
     out: dict[str, dict] = {}
     for name in QUERIES:
-        qs[name](spark, WARMUP).write.format("noop").mode("overwrite").save()
-        real01 = run(name, REAL_01)
-        gen01 = run(name, GEN_01)
-        sf1 = run(name, GEN_1)
+        row = {key: rows[name].get("secs") for key, rows in points.items()}
+        real01, gen01, sf1 = row.values()
+        errors = {k: rows[name]["error"] for k, rows in points.items() if "error" in rows[name]}
         out[name] = {
-            "real_sf0.1_sec": real01,
-            "gen_sf0.1_sec": gen01,
-            "gen_sf1_sec": sf1,
-            "gen01_over_real": round(gen01 / real01, 3) if real01 else None,
-            "sf1_over_gen01": round(sf1 / gen01, 3) if gen01 else None,
+            **row,
+            "gen01_over_real": round(gen01 / real01, 3) if real01 and gen01 else None,
+            "sf1_over_gen01": round(sf1 / gen01, 3) if gen01 and sf1 else None,
+            **({"errors": errors} if errors else {}),
         }
         print(json.dumps({"query": name, **out[name]}), flush=True)
 
     payload = {
         "queries": out,
-        "cpus": CPUS,
+        "cpus": bench._querybench().host_cores(),
         "generator": "scripts/gen_sf.py seed=42 (distribution-matched)",
     }
     dest = Path(sys.argv[1]) if len(sys.argv) > 1 else Path(_REPO) / "BENCH_SF1.json"
     dest.write_text(json.dumps(payload, indent=1) + "\n")
     print(f"wrote {dest}")
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -616,50 +616,6 @@ def test_bench_stdout_line_fits_driver_tail():
     assert parsed["queries_omitted"] == len(timings) - len(parsed["queries"])
 
 
-def test_bench_line_queries_survive_large_solo_retimed():
-    """VERDICT r19 #1: on a drifted box the >1.5x gate solo-retimes a
-    third of the suite; the r18/r19 lines packed that 60-entry
-    ``solo_retimed`` map into the budget BEFORE fitting ``queries``,
-    which emptied the per-query map and left the driver's PERF
-    comparison with n_common=0 two rounds running.  The line must now
-    carry the full r03 series regardless of how many entries were
-    solo-retimed, and account for any solo entries it drops."""
-    import json
-
-    import bench
-
-    timings = {
-        n: round(0.123 + i * 0.017, 3)
-        for i, n in enumerate(sorted(all_queries()))
-    }
-    # r19's actual failure scale: 60 solo re-times
-    solo = dict(sorted(timings.items())[:60])
-    summary = {
-        "metric": "headline_total",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "r03_subset_total": 24.0,
-        "n_timed": len(timings),
-        "n_errors": 0,
-        "solo_retimed": solo,
-        "sf": 0.1,
-    }
-    line = json.dumps(bench._fit_line(summary, timings))
-    assert len(line) <= 2000, len(line)
-    parsed = json.loads(line)
-    assert parsed["queries"], "queries emptied by solo_retimed again"
-    for n in bench.R03_SET:
-        assert n in parsed["queries"], f"r03 series member {n} dropped"
-    assert parsed["n_solo_retimed"] == 60
-    assert (
-        len(parsed["solo_retimed"]) + parsed["solo_retimed_omitted"] == 60
-    )
-    # solo entries that did fit carry the same values as the full map
-    for n, t in parsed["solo_retimed"].items():
-        assert solo[n] == t
-
-
 def test_decontam_budget_order_independent(spark):
     """Regression (ADVICE r14): materializing the hashed decontam tier
     must NOT change the exact tier's plan.  The hashed tier used to

@@ -1,6 +1,6 @@
 """Round-12 additions: REAL BMP pixel decode + WAV PCM sample decode
 (the r10/r11 'multimodal pixel decode stubbed' carry-over), plus the
-bench record-ledger fixes from ADVICE r11."""
+bench's ingest re-layout."""
 
 from __future__ import annotations
 
@@ -159,68 +159,6 @@ def test_format_gate_decision_logic(monkeypatch):
     assert io_mod.default_stream_format() == "parquet"
 
 
-def test_bench_records_rebaseline_on_hash_change(tmp_path):
-    """VERDICT r11 #6: the bench record ledger is change-aware.  A
-    query whose implementation hash changed since a record was set
-    must get a FRESH baseline (no record returned) instead of being
-    solo-retimed forever against the stale min; unchanged queries
-    keep their history — including hash-less pre-r12 files, which are
-    grandfathered only when the current hash still matches the
-    driver-verified ledger."""
-    import json as _json
-
-    import bench
-
-    (tmp_path / "BENCH_LOCAL_r01.json").write_text(_json.dumps({
-        "sf": 0.1,
-        "queries": {"q_changed": 1.0, "q_same": 2.0, "q_ledgered": 3.0},
-    }))
-    (tmp_path / "BENCH_LOCAL_r02.json").write_text(_json.dumps({
-        "sf": 0.1,
-        "queries": {"q_changed": 4.0, "q_same": 5.0},
-        "src_hashes": {"q_changed": "OLDHASH", "q_same": "H2"},
-    }))
-
-    records = bench._prior_records(
-        repo=str(tmp_path),
-        sf_dir="/root/testdata/sf0.1",
-        current_hashes={"q_changed": "NEWHASH", "q_same": "H2",
-                        "q_ledgered": "H3"},
-        verified_hashes={"q_same": "H2", "q_ledgered": "H3"},
-    )
-    # hash-carrying record with a stale hash: dropped; the hash-less
-    # r01 record is also dropped because the ledger disagrees
-    assert "q_changed" not in records
-    # matching hash keeps the r02 record; the hash-less r01 record is
-    # grandfathered (ledger hash matches) so the min survives
-    assert records["q_same"] == 2.0
-    # hash-less-only history, ledger matches current: grandfathered
-    assert records["q_ledgered"] == 3.0
-
-
-def test_bench_sf_tag_matches_numerically(tmp_path):
-    """ADVICE r11: a stored float sf (1.0) must match the raw dir
-    suffix ('1') — integer scale factors silently dropped every
-    record before this fix."""
-    import json as _json
-
-    import bench
-
-    assert bench._same_sf(1.0, "1")
-    assert bench._same_sf(0.1, "0.1")
-    assert not bench._same_sf(0.1, "1")
-    assert bench._same_sf("weird", "weird")
-
-    (tmp_path / "BENCH_LOCAL_r01.json").write_text(_json.dumps({
-        "sf": 1.0, "queries": {"q": 7.5}, "src_hashes": {"q": "H"},
-    }))
-    records = bench._prior_records(
-        repo=str(tmp_path), sf_dir="/data/sf1",
-        current_hashes={"q": "H"}, verified_hashes={},
-    )
-    assert records == {"q": 7.5}
-
-
 def test_hardlink_clone_recurses_into_partitioned_dirs(tmp_path):
     """ADVICE r11: a partitionBy-written staged input is a directory
     tree — the clone must carry the nested part files, not silently
@@ -241,60 +179,34 @@ def test_hardlink_clone_recurses_into_partitioned_dirs(tmp_path):
     ).stat().st_ino
 
 
-def test_bench_optimize_layout_rescues_split_starved_scans(spark, tmp_path, monkeypatch):
+def test_bench_relayout_rescues_split_starved_scans(spark, tmp_path, monkeypatch):
     """The driver's single-row-group parquet caps every scan at one
     task; bench's untimed ingest re-layout must produce a multi-split
-    copy with identical rows (PERF.md r12 Finding 2)."""
+    copy with identical rows in the same order (PERF.md r12 Finding 2)."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
     import bench
+    from amazon_books_review_spark.sources.io import TESTDATA_TABLES
 
     src = tmp_path / "sfx"
     src.mkdir()
     # single-file, single-row-group source for each required table
-    import pandas as pd
-
-    from amazon_books_review_spark.sources.io import TESTDATA_TABLES
-
     for t in TESTDATA_TABLES:
         pd.DataFrame({"a": range(500), "t": [t] * 500}).to_parquet(
             src / f"{t}.parquet", index=False
         )
-    monkeypatch.setattr(bench, "SF_DIR", str(src))
-    monkeypatch.setattr(bench, "CPUS", 8)
-    out_dir, sec = bench._optimize_layout(spark)
-    try:
-        df = spark.read.parquet(f"{out_dir}/orders.parquet")
-        assert df.rdd.getNumPartitions() > 1, "re-layout still single-split"
-        assert df.count() == 500
-        assert sec >= 0.0
-    finally:
-        import shutil
-
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-
-def test_bench_prior_records_loads_catalog_lazily(tmp_path):
-    """_prior_records must trigger the lazy catalog load itself: with
-    an unloaded registry the current-hash map would be empty and every
-    stale record would be grandfathered (the r12 first-run bug —
-    heavy_hitters_mg kept its pre-change record).  Hermetic: a crafted
-    detail file records a REAL catalog query under a hash that cannot
-    match its live src_hash; the record must be dropped, which only
-    happens if the registry actually loaded."""
-    import json as _json
-
-    import bench
-    from amazon_books_review_spark.plans.catalog import _REGISTRY
-
-    (tmp_path / "BENCH_LOCAL_r01.json").write_text(_json.dumps({
-        "sf": 0.1,
-        "queries": {"heavy_hitters_mg": 0.5},
-        "src_hashes": {"heavy_hitters_mg": "not-a-real-hash"},
-    }))
-    records = bench._prior_records(
-        repo=str(tmp_path), sf_dir="/root/testdata/sf0.1"
-    )
-    assert _REGISTRY, "registry still empty after _prior_records"
-    assert "heavy_hitters_mg" not in records, "stale-hash record survived"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    out_dir = tmp_path / "laid"
+    bench.relayout(str(src), str(out_dir))
+    parts = sorted((out_dir / "orders.parquet").iterdir())
+    assert len(parts) == 4  # max(4, 8 // 2)
+    df = spark.read.parquet(str(out_dir / "orders.parquet"))
+    assert df.rdd.getNumPartitions() > 1, "re-layout still single-split"
+    assert sorted(r.a for r in df.collect()) == list(range(500))
+    # contiguous slices: the part files in name order are the source rows
+    rows = [a for p in parts for a in pq.read_table(p).column("a").to_pylist()]
+    assert rows == list(range(500))
 
 
 def test_margin_bitext_matches_plain_python_replay(spark):

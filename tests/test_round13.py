@@ -440,14 +440,3 @@ def test_decontam_hashed_equals_exact_tier(spark):
     hashed = sorted((r.asDict() for r in decontam_hashed_prefilter(spark, sf).collect()), key=key)
     assert exact == hashed
     assert any(r["contaminated"] for r in exact)  # flag genuinely exercised
-
-
-def test_solo_rerun_threshold_constant():
-    """The solo lane re-runs short queries once warm (r13 trio
-    adjudication); pin the gate so it can't silently vanish.  Raised
-    3 -> 10 in r14: a multi-mapInPandas query measured 9.2 s fresh vs
-    2.0 s warm, so fresh-session first-touch cost dominates well above
-    the original sub-second regime."""
-    import bench
-
-    assert bench._SOLO_RERUN_UNDER_SEC == 10.0

@@ -1,6 +1,6 @@
 """Round-14 additions (VERDICT r13): self-sizing capacity for the two
-fixed-config ANN catalog entries, nprobe multi-assignment for the
-bitext k-means tier, and the net-of-floor coverage invariant.
+fixed-config ANN catalog entries and nprobe multi-assignment for the
+bitext k-means tier.
 
 The sizing rules are DERIVED, not pinned — `lsh_planes_for` and
 `km_k_for` are pure integer arithmetic replayed verbatim by the DuckDB
@@ -11,17 +11,11 @@ multiprobe assignment's determinism/equivalence contracts.
 
 from __future__ import annotations
 
-import glob
-import json
-from pathlib import Path
-
 import duckdb
 import pytest
 
 from amazon_books_review_spark.functions.similarity import lsh_planes_for
 from amazon_books_review_spark.plans.scale_ops_queries import km_k_for
-
-REPO = Path(__file__).resolve().parents[1]
 
 
 # ---------------------------------------------------------------------------
@@ -299,35 +293,3 @@ def test_zero_norm_vectors_route_deterministically(spark):
     ivf2 = ivf_topk(df, probes, "vec_id", "embedding", "label",
                     dim=8, k=3, nprobe=2).collect()
     assert sorted(map(str, ivf)) == sorted(map(str, ivf2))
-
-
-# ---------------------------------------------------------------------------
-# Bench detail invariants (VERDICT r13 #7)
-# ---------------------------------------------------------------------------
-
-def _latest_bench_local() -> dict:
-    paths = sorted(glob.glob(str(REPO / "BENCH_LOCAL_r*.json")))
-    assert paths, "no BENCH_LOCAL_r*.json artifacts"
-    return json.loads(Path(paths[-1]).read_text())
-
-
-def test_every_streaming_entry_carries_net_of_floor():
-    """VERDICT r13 #7: every streaming_* query in the bench detail
-    must have a floor-subtracted figure, so a new streaming entry
-    can't silently skip the net-of-floor accounting that makes
-    operator-cost movement visible."""
-    detail = _latest_bench_local()
-    streaming = {n for n in detail["queries"] if n.startswith("streaming_")}
-    assert streaming, "no streaming entries in bench detail?"
-    covered = set(detail.get("net_of_floor", {}))
-    missing = sorted(streaming - covered)
-    assert not missing, f"streaming entries without net_of_floor: {missing}"
-
-
-def test_solo_shots_recorded_for_short_rerun_lane():
-    """ADVICE r13 #4: when the min-of-two short-query lane runs, both
-    shots must be auditable.  Structural check on bench.py (the
-    artifact only contains solo_shots once a new bench runs)."""
-    src = (REPO / "bench.py").read_text()
-    assert "solo_shots" in src
-    assert '"fresh": secs' in src and '"warm": secs2' in src

@@ -1,6 +1,5 @@
-"""Round-15 regression tests: solo-lane streaming floors, sf1_bench
-argument validation, and the bitext-kmeans oracle-parity scale guard
-(ADVICE r14 medium)."""
+"""Round-15 regression tests: sf1_bench argument validation and the
+bitext-kmeans oracle-parity scale guard (ADVICE r14 medium)."""
 
 from __future__ import annotations
 
@@ -12,43 +11,6 @@ import pyarrow.parquet as pq
 import pytest
 
 REPO = Path(__file__).resolve().parents[1]
-
-
-# ---------------------------------------------------------------------------
-# VERDICT r14 #7: solo-retimed streaming entries carry their own floor
-# ---------------------------------------------------------------------------
-
-def test_net_of_floor_uses_solo_session_floor():
-    import bench
-
-    timings = {
-        "streaming_windowed_counts": 2.0,   # solo-retimed, fresh session
-        "streaming_dedup_events": 1.0,      # main warm session
-        "tpch_q1_pricing_summary": 5.0,     # not streaming: excluded
-    }
-    net = bench._net_of_floor(
-        timings,
-        streaming_floor=0.4,
-        solo_floors={"streaming_windowed_counts": 1.1},
-    )
-    assert net == {
-        "streaming_windowed_counts": 0.9,  # 2.0 - its OWN 1.1s floor
-        "streaming_dedup_events": 0.6,     # 1.0 - warm-session 0.4s
-    }
-
-
-def test_net_of_floor_failed_solo_floor_falls_back():
-    import bench
-
-    # a 0.0 solo floor means the measurement failed — fall back to the
-    # session floor rather than reporting gross as net
-    net = bench._net_of_floor(
-        {"streaming_x": 1.0}, streaming_floor=0.4, solo_floors={"streaming_x": 0.0}
-    )
-    assert net == {"streaming_x": 0.6}
-    # and never below zero
-    net = bench._net_of_floor({"streaming_x": 0.2}, streaming_floor=0.4)
-    assert net == {"streaming_x": 0.0}
 
 
 # ---------------------------------------------------------------------------
