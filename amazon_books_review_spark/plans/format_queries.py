@@ -27,6 +27,7 @@ from pyspark.sql.types import (
 
 from amazon_books_review_spark.sources.io import (
     load_table,
+    read_parquet,
     read_table_format,
     write_table_format,
 )
@@ -168,7 +169,7 @@ def dpp_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _fixture_path("dpp", sf_dir)
     li.write.mode("overwrite").partitionBy("ship_year").parquet(path)
-    fact = spark.read.parquet(path)
+    fact = read_parquet(spark, path)
 
     from pyspark.sql.window import Window
 

@@ -50,6 +50,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from amazon_books_review_spark.sources.io import read_parquet
+
 _MANIFEST = "_versions.json"  # legacy single-file manifest (read + migrated)
 _CLAIMS = "_claims"
 _COMMITS = "_commits"
@@ -208,7 +210,7 @@ class VersionedTable:
                 f"{self.path}: version {version} was vacuumed — history "
                 f"retains its metadata only"
             )
-        return spark.read.parquet(str(Path(self.path) / f"v={version}"))
+        return read_parquet(spark, str(Path(self.path) / f"v={version}"))
 
     # -- retention ----------------------------------------------------------
     def vacuum(self, keep_last: int, reclaim_stale_claims: bool = False) -> list[int]:

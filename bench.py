@@ -21,7 +21,8 @@ MemTotal, at most 16g):
    and a row group is Spark's smallest split, so without it every scan
    runs on one task.
 3. ``prestage_inputs``, untimed: the process-cached fixtures (streaming
-   feeds, the warcish container) are staged at the timed scale.
+   feeds, the warcish container) that the timed entries read are
+   staged at the timed scale.
 4. one querybench ``execute`` per entry through the noop sink, which
    times construction (``construct_s``, including the eager jobs the
    iterative operators run while building) and the action
@@ -417,7 +418,7 @@ def time_entries(spark, names, sf_dir: str) -> dict:
         relayout(sf_dir, laid)
         layout_s = time.perf_counter() - t
         t = time.perf_counter()
-        prestage_inputs(spark, laid)
+        prestage_inputs(spark, laid, names)
         prestage_s = time.perf_counter() - t
         for name in names:
             if name in rows:

@@ -529,6 +529,34 @@ def test_headline_plan_budget(spark, name):
     assert smj <= max_smj, f"{name}: {smj} SortMergeJoins (budget {max_smj})"
 
 
+#: name -> max Spark jobs a SECOND build of the entry may launch at
+#: sf0.001, after one warm build.  Eager jobs (``materialize``,
+#: ``count``/``first``, parquet schema inference) run while the query
+#: is built, on every execution.  Set from HEAD; only ever tightened.
+EAGER_BUDGETS: dict[str, int] = {
+    "flagship_gold_rollup": 0,
+    "tpch_q1_pricing_summary": 0,
+    "tpch_q3_shipping_priority": 0,
+    "tpch_q9_product_profit": 0,
+    "tpch_q21_sole_late_supplier": 0,
+    "text_token_stats": 0,
+    "top_orders_per_customer": 0,
+    "funnel_conversion": 0,
+}
+
+
+@pytest.mark.parametrize("name", sorted(EAGER_BUDGETS))
+def test_eager_job_budget(spark, name):
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    QUERIES[name](spark, SF)
+    first = dag.nextJobId()
+    QUERIES[name](spark, SF)
+    jobs = dag.nextJobId() - first
+    assert jobs <= EAGER_BUDGETS[name], (
+        f"{name}: {jobs} eager jobs on a warm build (budget {EAGER_BUDGETS[name]})"
+    )
+
+
 def test_bench_headline_names_resolve():
     """Every bench.HEADLINE name must exist in the catalog (a typo
     would surface only as an err row in the round artifact), carry no
