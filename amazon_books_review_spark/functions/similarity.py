@@ -21,6 +21,8 @@ type; sums fold sequentially in array order => deterministic.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1912,14 +1914,21 @@ def deterministic_planes(n_planes: int, dim: int, table: int = 0) -> list[list[f
     """Reproducible pseudo-random hyperplanes: component (p, d) is
     ``md5("{table}|{p}|{d}")``'s first 8 hex chars scaled to [-1, 1).
     Computed driver-side with hashlib (md5 is md5 everywhere), so the
-    exact same constants can be embedded in an external oracle."""
+    exact same constants can be embedded in an external oracle.
+    Memoized (catalog import asks for the same few families hundreds
+    of times); each call returns fresh lists."""
+    return [list(row) for row in _planes(n_planes, dim, table)]
+
+
+@functools.lru_cache(maxsize=128, typed=True)
+def _planes(n_planes: int, dim: int, table: int) -> tuple[tuple[float, ...], ...]:
     import hashlib
 
     def comp(p: int, d: int) -> float:
         h = hashlib.md5(f"{table}|{p}|{d}".encode()).hexdigest()[:8]
         return int(h, 16) / float(16**8) * 2.0 - 1.0
 
-    return [[comp(p, d) for d in range(dim)] for p in range(n_planes)]
+    return tuple(tuple(comp(p, d) for d in range(dim)) for p in range(n_planes))
 
 
 def lsh_bucketed_topk(

@@ -36,6 +36,17 @@ listing error, an empty directory, any subdirectory such as a
 partitioned table or a streaming sink's ``_spark_metadata``) and a
 ``mergeSchema`` session read plain inference.  ``table_row_count``
 keys its footer counts on the same fingerprint.
+
+Write-through parquet writes: ``write_parquet`` knows what it just
+wrote, so a later read of it pays no Spark job either.  After the
+write it reads each file's footer with pyarrow (no Spark job), returns
+the summed row count of the files the write added, and seeds the
+schema cache with the schema Spark stored in the footers
+(``org.apache.spark.sql.parquet.row.metadata``) made nullable, which
+is what inference returns.  The seed goes in only if a second
+fingerprint equals the first.  A ``partition_by`` write, an
+unfingerprintable path, summary files and a file without Spark's
+footer key seed nothing and return None.
 """
 
 from __future__ import annotations
@@ -48,7 +59,14 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+    _parse_datatype_json_string,
+)
 
 from amazon_books_review_spark.session import materialize
 
@@ -195,6 +213,24 @@ _SCHEMA_CONFS = (
 _SCHEMAS = _FingerprintCache(256)
 
 
+def _local_path(path: str) -> str:
+    return urlparse(path).path if path.startswith("file:") else path
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """``_SCHEMAS`` key for ``path`` under the session's inference
+    confs; None in a ``mergeSchema`` session, whose reads always
+    infer."""
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    if confs[-1].lower() == "true":
+        return None
+    return (
+        spark.sparkContext.applicationId,
+        os.path.abspath(_local_path(path)),
+        confs,
+    )
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """S3 — Parquet scan (vectorized, column-pruned, filter-pushed by
     Catalyst as long as callers keep predicates on bare columns).
@@ -207,13 +243,9 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     self-join makes its columns ambiguous.  Unfingerprintable paths
     and ``mergeSchema`` sessions infer on every call."""
     fingerprint = file_fingerprint(path)
-    if fingerprint is None:
+    key = None if fingerprint is None else _schema_key(spark, path)
+    if key is None:
         return spark.read.parquet(path)
-    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
-    if confs[-1].lower() == "true":
-        return spark.read.parquet(path)
-    local = urlparse(path).path if path.startswith("file:") else path
-    key = (spark.sparkContext.applicationId, os.path.abspath(local), confs)
     schema = _SCHEMAS.get(key, fingerprint)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
@@ -249,16 +281,85 @@ def write_parquet(
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     max_records_per_file: int | None = None,
-) -> None:
+) -> int | None:
     """S2 — Parquet sink with an explicit mode (reference omits it,
     BD:203).  ``partition_by`` enables partition pruning downstream;
-    ``max_records_per_file`` bounds file sizes at scale."""
+    ``max_records_per_file`` bounds file sizes at scale.
+
+    Write-through: returns the number of rows written, summed from the
+    footers of the files the write added (pyarrow, no Spark job), and
+    seeds ``read_parquet``'s schema cache for ``path`` with the schema
+    Spark stored in those footers, made nullable as inference makes
+    it, so the next ``read_parquet(path)`` launches no job.  Returns
+    None and seeds nothing for a ``partition_by`` write, a path
+    ``file_fingerprint`` cannot fingerprint (remote, glob), a
+    directory holding summary files, any file without Spark's footer
+    key or files that change while their footers are read; the schema
+    is also not seeded when the files disagree on it."""
+    before = None if partition_by else file_fingerprint(path)
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.parquet(path)
+    if partition_by:
+        return None
+    return _write_through(df.sparkSession, path, before)
+
+
+#: Footer key under which Spark's parquet writer stores the schema of
+#: the rows it wrote (``ParquetReadSupport.SPARK_METADATA_KEY``).
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable,
+    as a file scan reports it (Scala's ``DataType.asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _write_through(spark: SparkSession, path: str, before: tuple | None) -> int | None:
+    """Rows in the files under ``path`` that are not in the pre-write
+    fingerprint ``before``, from their footers; seeds ``_SCHEMAS``
+    (see :func:`write_parquet`)."""
+    import pyarrow.parquet as pq
+
+    fingerprint = file_fingerprint(path)
+    if fingerprint is None or any(name.startswith("_") for name, *_ in fingerprint):
+        return None
+    local = _local_path(path)
+    old = set(before or ())
+    n_rows, schemas = 0, set()
+    try:
+        for entry in fingerprint:
+            meta = pq.read_metadata(os.path.join(local, entry[0]))
+            schema = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+            if schema is None:
+                return None
+            schemas.add(schema)
+            if entry not in old:
+                n_rows += meta.num_rows
+    except (OSError, ValueError):
+        return None
+    if file_fingerprint(path) != fingerprint:
+        return None
+    key = _schema_key(spark, path)
+    if key is not None and len(schemas) == 1:
+        footer = _parse_datatype_json_string(schemas.pop().decode())
+        _SCHEMAS.put(key, fingerprint, _as_nullable(footer))
+    return n_rows
 
 
 def read_table_format(
@@ -562,7 +663,7 @@ def write_stream_update_upsert(
         spark = batch_df.sparkSession
         batch_df = materialize(batch_df)
         try:
-            existing = spark.read.parquet(path)
+            existing = read_parquet(spark, path)
             merged = existing.join(
                 batch_df.select(*keys), keys, "left_anti"
             ).unionByName(batch_df)
@@ -578,7 +679,7 @@ def write_stream_update_upsert(
             ):
                 raise
             merged = batch_df
-        materialize(merged).write.mode("overwrite").parquet(path)
+        write_parquet(materialize(merged), path)
 
     writer = (
         df.writeStream.outputMode("update")
@@ -611,7 +712,10 @@ def write_stream_complete(
     """
 
     def _overwrite(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.format(fmt).mode("overwrite").save(path)
+        if fmt == "parquet":
+            write_parquet(batch_df, path)
+        else:
+            batch_df.write.format(fmt).mode("overwrite").save(path)
 
     writer = (
         df.writeStream.outputMode("complete")

@@ -18,7 +18,11 @@ plain parquet, with Delta-style OPTIMISTIC CONCURRENCY for writers:
   reads the latest committed snapshot;
 * ``history()`` is ``DESCRIBE HISTORY`` (version, timestamp, row
   count, operation note), merged across commit files and any legacy
-  ``_versions.json`` manifest;
+  ``_versions.json`` manifest.  The row count ``n_rows`` is summed
+  from the snapshot's parquet footers by the write itself
+  (``sources.io.write_parquet``), which also seeds the schema cache,
+  so a commit launches one Spark job, the write, and reading the
+  snapshot back launches none;
 * ``vacuum(keep_last=K)`` drops data directories of expired versions
   while keeping their history rows — the storage/time-travel trade
   made explicit.
@@ -50,7 +54,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from amazon_books_review_spark.sources.io import read_parquet
+from amazon_books_review_spark.sources.io import read_parquet, write_parquet
 
 _MANIFEST = "_versions.json"  # legacy single-file manifest (read + migrated)
 _CLAIMS = "_claims"
@@ -152,7 +156,8 @@ class VersionedTable:
            for the smallest N above every claimed/committed version.
            A loser of the race gets ``FileExistsError`` and retries
            with the next number — two writers can never both own N.
-        2. DATA: write the parquet under ``v=N`` (exclusive by claim).
+        2. DATA: write the parquet under ``v=N`` (exclusive by claim);
+           ``n_rows`` comes from the footers of the files written.
         3. COMMIT: rename ``_commits/v=N.json`` into place — the
            atomic commit point.  A crash before this leaves a claim +
            orphan directory (vacuum noise), never a readable
@@ -176,8 +181,7 @@ class VersionedTable:
                 continue  # lost the race for this number; recompute and retry
 
         data_dir = root / f"v={version}"
-        df.write.mode("errorifexists").parquet(str(data_dir))
-        n_rows = df.sparkSession.read.parquet(str(data_dir)).count()
+        n_rows = write_parquet(df, str(data_dir), mode="errorifexists")
         entry = {
             "version": version,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),

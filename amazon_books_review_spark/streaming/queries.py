@@ -47,14 +47,26 @@ from amazon_books_review_spark.sources.io import (
 #: it UP to keys-per-partition x throughput (hundreds-to-thousands,
 #: RocksDB-backed); for the bounded availableNow correctness runs here
 #: you size it DOWN so fixed commit cost doesn't dwarf the data.
+#:
+#: 8 is the CAP, not the value: a stream starts with
+#: ``min(STATE_PARTITIONS, defaultParallelism)`` state partitions, so
+#: no micro-batch runs more state-store tasks than the host has slots.
+#: On a 4-core host 8 partitions meant two waves of store commits per
+#: stateful batch; at 4, warm ``streaming_dedup_events`` construction
+#: went from about 1.35 to 1.15 s and ``streaming_windowed_counts``
+#: from about 1.0 to 0.81 s, with identical results.  Hosts with 8 or
+#: more slots keep 8.
 STATE_PARTITIONS = 8
 
 
 @contextmanager
-def _state_partitions(spark: SparkSession, n: int = STATE_PARTITIONS):
-    """Pin shuffle partitions while a stateful stream STARTS (the value
-    is captured into the checkpoint then), restoring the batch setting
-    after — keeps the session's batch plans at their own size."""
+def _state_partitions(spark: SparkSession):
+    """Pin shuffle partitions to ``min(STATE_PARTITIONS,
+    defaultParallelism)`` while a stateful stream STARTS (the value is
+    captured into a fresh checkpoint then; a restarted stream keeps
+    its checkpoint's own value), restoring the batch setting after —
+    keeps the session's batch plans at their own size."""
+    n = min(STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

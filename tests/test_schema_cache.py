@@ -2,7 +2,8 @@
 cache: a cached value is served only while the path's files, and the
 session confs that shape inference, are unchanged.  The rewrite, conf
 and fall-through tests would fail against a cache keyed on the path
-alone."""
+alone.  write_parquet seeds the cache with what inference would
+return, or nothing."""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
 from amazon_books_review_spark.sources import io as sio
@@ -158,3 +161,63 @@ def test_cache_evicts_least_recently_used():
     assert cache.get("b", (1,)) is None
     assert cache.get("a", (1,)) == "A" and cache.get("c", (1,)) == "C"
     assert cache.get("a", (2,)) is None  # a changed fingerprint misses
+
+
+def _seeded(spark, path):
+    return sio._SCHEMAS.get(sio._schema_key(spark, path), sio.file_fingerprint(path))
+
+
+@pytest.mark.parametrize("ntz", ["true", "false"])
+def test_write_seeds_the_schema_inference_returns(spark, tmp_path, ntz):
+    """The seeded schema is the one a fresh inference returns: every
+    field, element and value nullable.  The frame's own schema (and the
+    raw footer schema) keep ``nullable=False`` and would not match."""
+    df = spark.range(3).select(
+        "id",
+        F.array(F.struct(F.col("id").alias("a"), F.lit("x").alias("b"))).alias("arr"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.col("id").cast("decimal(12,2)").alias("dec"),
+        F.timestamp_seconds("id").alias("ts"),
+        F.expr("TIMESTAMP_NTZ '2024-01-01 00:00:00'").alias("ntz"),
+    )
+    path = str(tmp_path / "t")
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, ntz)
+        assert sio.write_parquet(df, path) == 3
+        seeded = _seeded(spark, path)
+        fresh = spark.read.parquet(path).schema
+        assert seeded == fresh
+        assert df.schema != fresh
+        first = _next_job_id(spark)
+        assert sio.read_parquet(spark, path).schema == fresh
+        assert _next_job_id(spark) == first
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_append_counts_only_the_rows_it_wrote(spark, tmp_path):
+    path = str(tmp_path / "t")
+    assert sio.write_parquet(spark.range(3), path) == 3
+    assert sio.write_parquet(spark.range(5), path, mode="append") == 5
+    assert sio.read_parquet(spark, path).count() == 8
+
+
+def test_write_beside_pyarrow_file_seeds_nothing_and_infers(spark, tmp_path):
+    """A file without Spark's footer key (pyarrow wrote it) leaves the
+    write's answer unknown: None, no seed, and the next read infers."""
+    path = tmp_path / "t"
+    path.mkdir()
+    pq.write_table(pa.table({"id": pa.array([10, 11], pa.int64())}), str(path / "a.parquet"))
+    assert sio.write_parquet(spark.range(3), str(path), mode="append") is None
+    assert _seeded(spark, str(path)) is None
+    first = _next_job_id(spark)
+    df = sio.read_parquet(spark, str(path))
+    assert _next_job_id(spark) > first
+    assert sorted(r.id for r in df.collect()) == [0, 1, 2, 10, 11]
+
+
+def test_partitioned_write_returns_none(spark, tmp_path):
+    df = spark.range(4).withColumn("k", F.col("id") % 2)
+    assert sio.write_parquet(df, str(tmp_path / "t"), partition_by=["k"]) is None

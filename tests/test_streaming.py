@@ -624,3 +624,17 @@ def test_stream_stream_left_outer_join_emits_nulls_on_eviction(spark, tmp_path):
         assert key not in got, f"{key} emitted twice"
         got[key] = r.rid
     assert got == {(1, "a"): 1, (2, "b"): None, (1, "c"): None}, f"got {got}"
+
+
+def test_state_partitions_follow_the_host(spark):
+    """Stateful streams start with no more state partitions than the
+    host has slots (8 at most), and the batch value comes back."""
+    from amazon_books_review_spark.streaming.queries import _state_partitions
+
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    with _state_partitions(spark):
+        assert spark.conf.get(conf) == str(
+            min(8, spark.sparkContext.defaultParallelism)
+        )
+    assert spark.conf.get(conf) == before

@@ -201,3 +201,30 @@ def test_migrate_legacy_survives_racing_winner(spark, tmp_path):
     assert not legacy.exists()
     t._migrate_legacy()  # second call: file gone — must be a no-op, not a crash
     assert [h["version"] for h in t.history()] == [0]
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_write_launches_only_its_write_job(spark, tmp_path):
+    """``n_rows`` comes from the footers and the snapshot's schema is
+    seeded, so a commit is one Spark job and the read-back's schema
+    costs none."""
+    t = VersionedTable(str(tmp_path / "tbl"))
+    df = spark.range(100)
+    first = _next_job_id(spark)
+    t.write(df)
+    assert _next_job_id(spark) - first == 1
+    t.read(spark)
+    assert _next_job_id(spark) - first == 1
+    assert t.history()[-1]["n_rows"] == 100
+
+
+def test_n_rows_of_empty_and_multi_file_snapshots(spark, tmp_path):
+    t = VersionedTable(str(tmp_path / "tbl"))
+    t.write(spark.range(0))
+    t.write(spark.range(0, 30, 1, 3))
+    assert len(list((tmp_path / "tbl" / "v=1").glob("*.parquet"))) == 3
+    assert [h["n_rows"] for h in t.history()] == [0, 30]
+    assert [t.read(spark, version=v).count() for v in (0, 1)] == [0, 30]
