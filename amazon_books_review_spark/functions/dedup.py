@@ -24,12 +24,20 @@ Scale notes inline per function.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from amazon_books_review_spark.functions.text import tokens
 from amazon_books_review_spark.functions.text import word_ngrams as text_ngrams
-from amazon_books_review_spark.session import materialize
+from amazon_books_review_spark.operators.metrics import with_observation
+from amazon_books_review_spark.session import (
+    fetch_if_small,
+    local_frame,
+    materialize,
+    size_metrics,
+)
 
 
 def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -394,9 +402,10 @@ def connected_components(
     join is a broadcast (the edge frame is never shuffled), degrading
     to a shuffle join past the cap.  Labels are checkpointed and the
     lineage truncated per round so the plan doesn't grow with
-    iterations.  The per-round convergence check is a count on a
-    LIMIT 1 diff — the loop is driver-controlled but the data never
-    leaves the cluster.
+    iterations.  The per-round convergence check is an observation on
+    that checkpoint job.  A pair list that fits the broadcast threshold
+    takes the local arm instead (``session.materialize``): the same
+    rounds in numpy on the driver, returned as a ``LocalRelation``.
 
     ``algorithm="star"`` switches to large-star/small-star
     (:func:`connected_components_star`) — O(log n) rounds instead of
@@ -407,8 +416,6 @@ def connected_components(
         return connected_components_star(pairs, id_a, id_b, max_iter)
     if algorithm != "label_prop":
         raise ValueError(f"unknown algorithm: {algorithm!r}")
-    from amazon_books_review_spark.operators.joins import broadcast_if_small
-
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     # Symmetrize with ONE evaluation of the pair subtree: the
     # union-with-flipped form evaluates the (often expensive) upstream
@@ -424,45 +431,18 @@ def connected_components(
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
+    sym, obs = with_observation(sym, size_metrics("src", "dst"))
     sym = materialize(sym)
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    labels = materialize(nodes.withColumn("label", F.col("node")))
-    # Node count is dimension-sized and already materialized: one cheap
-    # count buys broadcast label joins every round (no edge shuffle).
-    n_nodes = labels.count()
-
-    changed = None
-    for _ in range(max_iter):
-        lb = broadcast_if_small(labels, n_nodes)
-        nbr_labels = sym.join(
-            lb, sym["dst"] == lb["node"]
-        ).select(F.col("src").alias("node"), F.col("label"))
-        # Fold the convergence check into the SAME materialization:
-        # the min-agg joins back to the old labels so the checkpointed
-        # frame carries a per-node changed flag — the subsequent
-        # convergence aggregate then scans the (tiny) checkpoint
-        # instead of paying a fresh join job per round.
-        old = broadcast_if_small(
-            labels.select("node", F.col("label").alias("old_label")), n_nodes
+    seen = obs.get
+    tbl = fetch_if_small(sym, seen["n"], seen["nulls"])
+    if tbl is not None:
+        node, label, changed, converged = _cc_label_prop_local(
+            tbl.column("src").to_numpy(), tbl.column("dst").to_numpy(), max_iter
         )
-        merged = (
-            labels.select("node", "label")
-            .unionByName(nbr_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("new_label"))
-            .join(old, "node")
-            .select(
-                "node",
-                F.col("new_label").alias("label"),
-                (F.col("new_label") != F.col("old_label")).cast("long").alias("ch"),
-            )
-            .transform(materialize)
-        )
-        changed = merged.agg(F.sum("ch")).first()[0]
-        labels = merged.select("node", "label")
-        if not changed:
-            break
+        labels = _local_labels(sym, node, label, "label")
     else:
+        labels, changed, converged = _cc_label_prop_rounds(sym, max_iter)
+    if not converged:
         # r19 (found by the SF10_SEMDEDUP_R19 decade audit): at
         # threshold-graph scale component diameters exceed any fixed
         # round budget and label propagation silently returned
@@ -482,6 +462,92 @@ def connected_components(
             stacklevel=2,
         )
     return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
+
+
+def _cc_label_prop_rounds(
+    sym: DataFrame, max_iter: int
+) -> tuple[DataFrame, int | None, bool]:
+    """The distributed min-label rounds of :func:`connected_components`
+    over the materialized symmetric edge list -> (labels, labels still
+    changing after the last round, converged)."""
+    from amazon_books_review_spark.operators.joins import broadcast_if_small
+
+    nodes = sym.select(F.col("src").alias("node")).distinct()
+    labels, obs = with_observation(
+        nodes.withColumn("label", F.col("node")), {"n": F.count(F.lit(1))}
+    )
+    labels = materialize(labels)
+    # Node count is dimension-sized and observed on the checkpoint: it
+    # buys broadcast label joins every round (no edge shuffle).
+    n_nodes = obs.get["n"]
+
+    changed = None
+    for _ in range(max_iter):
+        lb = broadcast_if_small(labels, n_nodes)
+        nbr_labels = sym.join(
+            lb, sym["dst"] == lb["node"]
+        ).select(F.col("src").alias("node"), F.col("label"))
+        # Fold the convergence check into the SAME materialization:
+        # the min-agg joins back to the old labels so the checkpointed
+        # frame carries a per-node changed flag, summed by an
+        # observation on the checkpoint job itself.
+        old = broadcast_if_small(
+            labels.select("node", F.col("label").alias("old_label")), n_nodes
+        )
+        merged, obs = with_observation(
+            labels.select("node", "label")
+            .unionByName(nbr_labels)
+            .groupBy("node")
+            .agg(F.min("label").alias("new_label"))
+            .join(old, "node")
+            .select(
+                "node",
+                F.col("new_label").alias("label"),
+                (F.col("new_label") != F.col("old_label")).cast("long").alias("ch"),
+            ),
+            {"ch": F.sum("ch")},
+        )
+        merged = materialize(merged)
+        changed = obs.get["ch"]
+        labels = merged.select("node", "label")
+        if not changed:
+            return labels, changed, True
+    return labels, changed, False
+
+
+def _cc_label_prop_local(
+    src: np.ndarray, dst: np.ndarray, max_iter: int
+) -> tuple[np.ndarray, np.ndarray, int | None, bool]:
+    """:func:`_cc_label_prop_rounds` on the driver: the same
+    synchronous min-label rounds over the fetched symmetric edge
+    arrays, with the same round budget and early stop."""
+    ids, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    s, d = idx[: len(src)], idx[len(src):]
+    node = np.unique(s)
+    labelled = np.zeros(len(ids), bool)
+    labelled[node] = True
+    hit = labelled[d]
+    s, d = s[hit], d[hit]
+    label = np.arange(len(ids))
+    changed = None
+    for _ in range(max_iter):
+        new = label.copy()
+        np.minimum.at(new, s, label[d])
+        changed = int(np.count_nonzero(new[node] != label[node]))
+        label = new
+        if not changed:
+            return ids[node], ids[label[node]], changed, True
+    return ids[node], ids[label[node]], changed, False
+
+
+def _local_labels(
+    edges: DataFrame, node: np.ndarray, label: np.ndarray, label_col: str
+) -> DataFrame:
+    """(node, ``label_col``) arrays as a ``LocalRelation`` typed like
+    the edge list's ids."""
+    t = edges.schema["src"].dataType
+    schema = StructType([StructField("node", t), StructField(label_col, t)])
+    return local_frame(edges.sparkSession, {"node": node, label_col: label}, schema)
 
 
 #: Edge count below which the per-round large-star intermediate is NOT
@@ -519,21 +585,50 @@ def connected_components_star(
 
     Convergence: the oriented edge set is a fixpoint.  Output contract
     matches :func:`connected_components`: (node, cluster_id = min
-    member id).
+    member id).  An edge set that fits the broadcast threshold runs
+    the same rounds on the driver (``session.materialize``).
     """
     raw = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
     )
     # orient big -> small; the star loop maintains this invariant
-    edges = (
+    edges, obs = with_observation(
         raw.select(
             F.greatest("src", "dst").alias("src"),
             F.least("src", "dst").alias("dst"),
-        )
-        .distinct()
-        .transform(materialize)
+        ).distinct(),
+        size_metrics("src", "dst"),
     )
+    edges = materialize(edges)
+    seen = obs.get
+    tbl = fetch_if_small(edges, seen["n"], seen["nulls"])
+    if tbl is not None:
+        node, cluster_id, converged = _cc_star_local(
+            tbl.column("src").to_numpy(), tbl.column("dst").to_numpy(), max_iter
+        )
+        labels = _local_labels(edges, node, cluster_id, "cluster_id")
+    else:
+        labels, converged = _cc_star_rounds(edges, seen["n"], max_iter)
+    if not converged:
+        import warnings
+
+        warnings.warn(
+            f"connected_components_star: no fixpoint in {max_iter}"
+            " rounds — labels may not be component minima; raise"
+            " max_iter (rounds needed grow O(log n)).",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    return labels
+
+
+def _cc_star_rounds(
+    edges: DataFrame, n_edges: int, max_iter: int
+) -> tuple[DataFrame, bool]:
+    """The distributed large-star/small-star rounds of
+    :func:`connected_components_star` over the materialized, oriented
+    edge set -> (labels, converged)."""
 
     def large_star(e: DataFrame) -> DataFrame:
         sym = e.unionByName(
@@ -572,14 +667,16 @@ def connected_components_star(
     # both sides are already distinct SETS, so |new| == |old| and
     # new \ old == {} imply equality without subtract's re-distinct of
     # both sides.
-    prev_count = edges.count()
+    prev_count = n_edges
+    converged = False
     for _ in range(max_iter):
         ls = large_star(edges)
         if prev_count >= _STAR_LS_CKPT_MIN_EDGES:
             ls = materialize(ls)
-        new_edges = materialize(small_star(ls))
-        new_count = new_edges.count()
-        same = (
+        new_edges, obs = with_observation(small_star(ls), {"n": F.count(F.lit(1))})
+        new_edges = materialize(new_edges)
+        new_count = obs.get["n"]
+        converged = (
             new_count == prev_count
             and new_edges.join(edges, ["src", "dst"], "left_anti")
             .limit(1)
@@ -588,18 +685,8 @@ def connected_components_star(
         )
         edges = new_edges
         prev_count = new_count
-        if same:
+        if converged:
             break
-    else:
-        import warnings
-
-        warnings.warn(
-            f"connected_components_star: no fixpoint in {max_iter}"
-            " rounds — labels may not be component minima; raise"
-            " max_iter (rounds needed grow O(log n)).",
-            RuntimeWarning,
-            stacklevel=2,
-        )
 
     roots = edges.select(F.col("dst").alias("node")).distinct()
     labels = (
@@ -608,7 +695,52 @@ def connected_components_star(
         .groupBy("node")
         .agg(F.min("cluster_id").alias("cluster_id"))
     )
-    return labels
+    return labels, converged
+
+
+def _cc_star_local(
+    src: np.ndarray, dst: np.ndarray, max_iter: int
+) -> tuple[np.ndarray, np.ndarray, bool]:
+    """:func:`_cc_star_rounds` on the driver.  Ids are ranked into
+    ``0..n-1`` (order kept) and each edge set is the sorted array of
+    keys ``src * n + dst``, so the fixpoint test — same count and
+    nothing new — is array equality."""
+    ids, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(ids)
+
+    def min_by(keys: np.ndarray, vals: np.ndarray) -> np.ndarray:
+        out = np.full(n, n)
+        np.minimum.at(out, keys, vals)
+        return out
+
+    def large_star(e: np.ndarray) -> np.ndarray:
+        es, ed = np.divmod(e, n)
+        ss, sd = np.r_[es, ed], np.r_[ed, es]
+        m = np.minimum(min_by(ss, sd)[ss], ss)
+        up = (sd > ss) & (sd != m)
+        return np.unique(sd[up] * n + m[up])
+
+    def small_star(e: np.ndarray) -> np.ndarray:
+        es, ed = np.divmod(e, n)
+        mins = min_by(es, ed)
+        m = mins[es]
+        srcs = np.unique(es)
+        return np.unique(np.r_[(ed * n + m)[ed != m], srcs * n + mins[srcs]])
+
+    edges = np.unique(idx[: len(src)] * n + idx[len(src):])
+    converged = False
+    for _ in range(max_iter):
+        new_edges = small_star(large_star(edges))
+        converged = np.array_equal(new_edges, edges)
+        edges = new_edges
+        if converged:
+            break
+    es, ed = np.divmod(edges, n)
+    roots = np.unique(ed)
+    node_all = np.r_[es, roots]
+    best = min_by(node_all, np.r_[ed, roots])
+    node = np.unique(node_all)
+    return ids[node], ids[best[node]], converged
 
 
 def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

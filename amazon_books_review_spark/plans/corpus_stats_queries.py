@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from amazon_books_review_spark.session import materialize
+from amazon_books_review_spark.session import local_frame, materialize
 from amazon_books_review_spark.sources.io import load_table
 
 
@@ -629,8 +629,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     round as a CTE pair with the identical replace.
     """
     merges = _bpe_merge_rounds(_bpe_words(spark, sf_dir))
-    return spark.createDataFrame(
-        merges, "merge_round long, l string, r string, merged string, cnt long"
+    return local_frame(
+        spark, merges, "merge_round long, l string, r string, merged string, cnt long"
     )
 
 

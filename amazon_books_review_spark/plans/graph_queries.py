@@ -31,13 +31,21 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from amazon_books_review_spark.operators.joins import broadcast_if_small
+from amazon_books_review_spark.operators.metrics import with_observation
 from amazon_books_review_spark.operators.windows import global_top_k
 from amazon_books_review_spark.plans.scale_ops_queries import copurchase_edges
-from amazon_books_review_spark.session import materialize
+from amazon_books_review_spark.session import (
+    fetch_if_small,
+    local_frame,
+    materialize,
+    size_metrics,
+)
 from amazon_books_review_spark.sources.io import load_table
 
 #: synchronous update rounds.  3 is where sf0.01/sf0.1 label churn
@@ -110,8 +118,33 @@ def propagate_labels(edges: DataFrame, iters: int = LP_ITERS) -> DataFrame:
     ``repartition("dst")`` — its per-round aggregate reads the
     checkpointed blocks directly, which is where the block-clustering
     compression lives (scale_ops_queries.pagerank_copurchase).
+
+    An edge list that fits the broadcast threshold takes the local arm
+    (``session.materialize``): the same rounds in numpy on the driver,
+    returned as a ``LocalRelation``.
     """
+    return _propagate_labels(edges, iters)[0]
+
+
+def _propagate_labels(
+    edges: DataFrame, iters: int
+) -> tuple[DataFrame, dict[str, np.ndarray] | None]:
+    """:func:`propagate_labels`, plus the local arm's label columns
+    (``None`` on the distributed arm)."""
+    edges, obs = with_observation(edges, size_metrics("src", "dst"))
     edges = materialize(edges)
+    seen = obs.get
+    tbl = fetch_if_small(edges.select("src", "dst"), seen["n"], seen["nulls"])
+    if tbl is not None:
+        node, lbl = _propagate_labels_local(
+            tbl.column("src").to_numpy(), tbl.column("dst").to_numpy(), iters
+        )
+        schema = StructType([
+            StructField("node", edges.schema["src"].dataType),
+            StructField("lbl", edges.schema["dst" if iters else "src"].dataType),
+        ])
+        cols = {"node": node, "lbl": lbl}
+        return local_frame(edges.sparkSession, cols, schema), cols
     labels = None  # round 1: identity labels, join elided
     n_nodes = None
     for _ in range(iters):
@@ -137,14 +170,41 @@ def propagate_labels(edges: DataFrame, iters: int = LP_ITERS) -> DataFrame:
                 (-F.col("best.neg")).alias("lbl"),
             )
         )
+        adopted, nodes_obs = with_observation(adopted, {"n": F.count(F.lit(1))})
         labels = materialize(adopted)
-        if n_nodes is None:
-            n_nodes = labels.count()  # node-sized, on the checkpoint
+        n_nodes = nodes_obs.get["n"]  # node-sized, observed on the checkpoint
     if labels is None:  # iters == 0: identity labels
         labels = edges.select(F.col("src").alias("node")).distinct().select(
             "node", F.col("node").alias("lbl")
         )
-    return labels
+    return labels, None
+
+
+def _propagate_labels_local(
+    src: np.ndarray, dst: np.ndarray, iters: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`propagate_labels` on the driver, over the fetched edge
+    arrays.  Ids are ranked into ``0..n-1`` first, which keeps their
+    order, so the (count desc, label asc) tie rule holds on ranks."""
+    ids, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    s, d = idx[: len(src)], idx[len(src):]
+    node = np.unique(s)
+    lbl = node  # identity labels; round 1 is then lbl = dst
+    for i in range(iters):
+        if i:  # inner join: edges into unlabeled nodes contribute nothing
+            lab = np.full(len(ids), -1)
+            lab[node] = lbl
+            hit = lab[d] >= 0
+            s_r, l_r = s[hit], lab[d[hit]]
+        else:
+            s_r, l_r = s, d
+        # count each (src, lbl) pair, then keep per src the largest
+        # count, ties to the smallest label
+        key, c = np.unique(s_r * len(ids) + l_r, return_counts=True)
+        o = np.lexsort((key, -c, key // len(ids)))
+        _, first = np.unique(key[o] // len(ids), return_index=True)
+        node, lbl = np.divmod(key[o][first], len(ids))
+    return ids[node], ids[lbl]
 
 
 def label_propagation_communities(
@@ -155,7 +215,22 @@ def label_propagation_communities(
     oracle unrolls to one CTE pair per round.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    labels = propagate_labels(copurchase_edges(li, directed=True))
+    labels, cols = _propagate_labels(copurchase_edges(li, directed=True), LP_ITERS)
+    if cols is not None:
+        # the local arm ran: roll the sizes up on the driver as well,
+        # so the result is one local table
+        _, inv, size = np.unique(cols["lbl"], return_inverse=True, return_counts=True)
+        schema = StructType([
+            StructField("p_partkey", labels.schema["node"].dataType),
+            StructField("community", labels.schema["lbl"].dataType),
+            StructField("community_size", LongType()),
+        ])
+        return local_frame(
+            spark,
+            {"p_partkey": cols["node"], "community": cols["lbl"],
+             "community_size": size[inv]},
+            schema,
+        )
     sizes = labels.groupBy("lbl").agg(
         F.count(F.lit(1)).cast("long").alias("community_size")
     )

@@ -67,13 +67,19 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from amazon_books_review_spark.functions import text
 from amazon_books_review_spark.operators.joins import broadcast_if_small
-from amazon_books_review_spark.session import materialize
+from amazon_books_review_spark.session import (
+    fetch_if_small,
+    local_frame,
+    materialize,
+    size_metrics,
+)
 from amazon_books_review_spark.sources.io import load_table
 
 # ---------------------------------------------------------------------------
@@ -782,6 +788,132 @@ PR_ITERS = 5
 PR_TOP = 20
 
 
+def pagerank_rounds(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
+    """``iters`` synchronous int64 PageRank rounds over a distinct
+    directed edge list ``(src, dst)`` (as :func:`copurchase_edges`
+    emits it) -> ``(node, r)``.
+
+    ``n_nodes`` is the number of distinct ``src``; every one starts at
+    ``init = PR_SCALE // n_nodes``; a round sends ``r div deg`` along
+    each out-edge of a ranked node, and a node that receives
+    ``recv`` ranks ``base + (85 * recv) div 100`` with
+    ``base = (15 * init) // 100``.  Only nodes that receive
+    contributions keep a rank (the oracle's inner joins).
+
+    The edge list is materialized once, with its degree, and an
+    ``Observation`` on that job yields its size and ``n_nodes``.  When
+    it fits the broadcast threshold the rounds run on the driver
+    (:func:`_pagerank_local`, see ``session.materialize``); otherwise
+    each round is one join of the node-sized rank table against the
+    static edge frame plus one ``groupBy(dst)``, materialized.
+    """
+    from pyspark.sql import Window
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from amazon_books_review_spark.operators.metrics import with_observation
+
+    # Pay the edge-side work ONCE: degree via a window over the same
+    # src partitioning (no groupBy+re-join round trip), re-cluster by
+    # dst, materialize.  Every iteration then broadcast-joins the
+    # node-sized rank table against this static frame — zero
+    # per-iteration edge-side shuffle beyond the narrow (dst, contrib)
+    # aggregate.  (Valid while nodes are dimension-sized, as here —
+    # parts are bounded; past the configured node budget
+    # broadcast_if_small drops the hint and the join degrades to a
+    # shuffle join on src.)  The graph order rides the same window
+    # spec, so it costs no sort: over distinct edges each src has one
+    # edge to its smallest dst, and the observation sums those.
+    #
+    # The ``repartition("dst")`` is LOAD-BEARING, but not for the
+    # reason the pre-r19 comment implied: the checkpoint scan does
+    # come back as UnknownPartitioning (EXP3 r19), so the per-round
+    # groupBy(dst) still plans an Exchange — what survives is the
+    # physical BLOCK CLUSTERING.  Over dst-clustered blocks each
+    # iteration's partial aggregation emits ~|nodes|/P rows per map
+    # task; over the window's src-clustered blocks every task sees
+    # nearly every dst and emits ~|nodes| rows — P× the exchanged
+    # rows, every iteration (guide §2.3: partial aggregation
+    # compresses by distinct keys PER MAP TASK, which block layout
+    # controls).  r19 removed this exchange on the metadata argument
+    # and the driver measured pagerank 2.62 → 5.20/3.35; the r20
+    # interleaved A/B (scripts/r20_exp_regressions.py +
+    # r20_exp_repart.py) read HEAD 4.35 median vs 3.17 restored /
+    # 3.20 with the checkpointed-node seed kept — restored.
+    w_deg = Window.partitionBy("src")
+    first = F.col("dst") == F.min("dst").over(w_deg)
+    observed, obs = with_observation(
+        edges.select(
+            "src", "dst",
+            F.count(F.lit(1)).over(w_deg).alias("deg"),
+            first.cast("long").alias("_first"),
+        ),
+        {**size_metrics("src", "dst"), "n_nodes": F.sum("_first")},
+    )
+    edges_deg = (
+        observed.select("src", "dst", "deg").repartition("dst").transform(materialize)
+    )
+    seen = obs.get
+    n_nodes = seen["n_nodes"] or 0  # a sum over no rows is null
+    tbl = fetch_if_small(edges_deg, seen["n"], seen["nulls"])
+    if tbl is not None:
+        node, r = _pagerank_local(
+            *(tbl.column(c).to_numpy() for c in ("src", "dst", "deg")), iters
+        )
+        schema = StructType([
+            StructField("node", edges_deg.schema["dst"].dataType),
+            StructField("r", LongType()),
+        ])
+        return local_frame(edges.sparkSession, {"node": node, "r": r}, schema)
+    init = PR_SCALE // n_nodes
+    base = (15 * init) // 100
+    # Round 1 needs no rank join: every src ranks init.
+    ranks = edges_deg.select("src", "dst", "deg", F.lit(init).cast("long").alias("r"))
+    for i in range(iters):
+        if i:
+            ranks = edges_deg.join(
+                broadcast_if_small(ranks, n_nodes),
+                edges_deg["src"] == ranks["node"],
+            )
+        ranks = (
+            ranks.select("dst", F.expr("r div deg").alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("recv"))
+            .select(
+                F.col("dst").alias("node"),
+                (F.lit(base) + F.expr("(85 * recv) div 100")).alias("r"),
+            )
+            .transform(materialize)
+        )
+    if not iters:
+        ranks = ranks.select(F.col("src").alias("node"), "r").distinct()
+    return ranks
+
+
+def _pagerank_local(
+    src: np.ndarray, dst: np.ndarray, deg: np.ndarray, iters: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`pagerank_rounds` on the driver: the same rounds over the
+    fetched ``(src, dst, deg)`` arrays, in int64.  Every operand is
+    non-negative, so numpy's floor division is Spark's ``div``."""
+    ids, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    s, d = idx[: len(src)], idx[len(src):]
+    deg = deg.astype(np.int64)
+    init = PR_SCALE // np.unique(s).size
+    base = (15 * init) // 100
+    ranked = np.zeros(len(ids), bool)
+    ranked[s] = True
+    r = np.full(len(ids), init, np.int64)
+    for _ in range(iters):
+        live = ranked[s]
+        recv = np.zeros(len(ids), np.int64)
+        np.add.at(recv, d[live], r[s[live]] // deg[live])
+        ranked = np.zeros(len(ids), bool)
+        ranked[d[live]] = True
+        r = base + (85 * recv) // 100
+    keep = np.flatnonzero(ranked)
+    return ids[keep], r[keep]
+
+
 def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (d=0.85, 5 iterations) over parts co-purchased in the
     same order, in pure int64 fixed-point.
@@ -804,61 +936,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected-components operator (functions/dedup.py).
     """
     li = load_table(spark, sf_dir, "lineitem")
-    edges = copurchase_edges(li, directed=True)
-    # Pay the edge-side work ONCE: degree via a window over the same
-    # src partitioning (no groupBy+re-join round trip), re-cluster by
-    # dst, materialize.  Every iteration then broadcast-joins the
-    # node-sized rank table against this static frame — zero
-    # per-iteration edge-side shuffle beyond the narrow (dst, contrib)
-    # aggregate.  (Valid while nodes are dimension-sized, as here —
-    # parts are bounded; past the configured node budget
-    # broadcast_if_small drops the hint and the join degrades to a
-    # shuffle join on src.)
-    #
-    # The ``repartition("dst")`` is LOAD-BEARING, but not for the
-    # reason the pre-r19 comment implied: the checkpoint scan does
-    # come back as UnknownPartitioning (EXP3 r19), so the per-round
-    # groupBy(dst) still plans an Exchange — what survives is the
-    # physical BLOCK CLUSTERING.  Over dst-clustered blocks each
-    # iteration's partial aggregation emits ~|nodes|/P rows per map
-    # task; over the window's src-clustered blocks every task sees
-    # nearly every dst and emits ~|nodes| rows — P× the exchanged
-    # rows, every iteration (guide §2.3: partial aggregation
-    # compresses by distinct keys PER MAP TASK, which block layout
-    # controls).  r19 removed this exchange on the metadata argument
-    # and the driver measured pagerank 2.62 → 5.20/3.35; the r20
-    # interleaved A/B (scripts/r20_exp_regressions.py +
-    # r20_exp_repart.py) read HEAD 4.35 median vs 3.17 restored /
-    # 3.20 with the checkpointed-node seed kept — restored.
-    from pyspark.sql import Window
-
-    w_deg = Window.partitionBy("src")
-    edges_deg = (
-        edges.withColumn("deg", F.count(F.lit(1)).over(w_deg))
-        .repartition("dst")
-        .transform(materialize)
-    )
-    # Seed ranks once on a checkpointed node table; its count is the
-    # graph order (saves the separate distinct-count job).
-    nodes = materialize(edges_deg.select(F.col("src").alias("node")).distinct())
-    n_nodes = nodes.count()
-    init = PR_SCALE // n_nodes
-    base = (15 * init) // 100
-    ranks = nodes.withColumn("r", F.lit(init))
-    for _ in range(PR_ITERS):
-        contrib = edges_deg.join(
-            broadcast_if_small(ranks, n_nodes),
-            edges_deg["src"] == ranks["node"],
-        ).select("dst", F.expr("r div deg").alias("c"))
-        ranks = (
-            contrib.groupBy("dst")
-            .agg(F.sum("c").alias("recv"))
-            .select(
-                F.col("dst").alias("node"),
-                (F.lit(base) + F.expr("(85 * recv) div 100")).alias("r"),
-            )
-            .transform(materialize)
-        )
+    ranks = pagerank_rounds(copurchase_edges(li, directed=True))
     from pyspark.sql import Window
 
     from amazon_books_review_spark.operators.windows import global_top_k
@@ -1440,9 +1518,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if 0 < n_rows <= cap:
         picks = _kcenter_greedy_driver(pts_plan.toArrow())
-        return spark.createDataFrame(
-            picks, "pick_order long, vec_id long, dist_sq long"
-        )
+        return local_frame(spark, picks, "pick_order long, vec_id long, dist_sq long")
 
     pts = materialize(pts_plan)
 
@@ -1468,9 +1544,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
         picks.append((i, best["vec_id"], best["dmin"]))
         dmin = F.least(dmin, d2_to(best["qv"]))
-    return spark.createDataFrame(
-        picks, "pick_order long, vec_id long, dist_sq long"
-    )
+    return local_frame(spark, picks, "pick_order long, vec_id long, dist_sq long")
 
 
 def _kcenter_greedy_driver(tbl) -> list[tuple[int, int, int | None]]:
@@ -2144,8 +2218,8 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     not) — zero shuffles, linear in corpus size.
     """
     signs = _rp_signs()
-    signs_df = spark.createDataFrame(
-        [(j, row) for j, row in enumerate(signs)], "j int, s array<bigint>"
+    signs_df = local_frame(
+        spark, list(enumerate(signs)), "j int, s array<bigint>"
     )
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.select(
@@ -2218,9 +2292,7 @@ def mixture_rebalance_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    weights = spark.createDataFrame(
-        [(lang, w) for lang, w in sorted(MIX_WEIGHTS.items())], "lang string, w int"
-    )
+    weights = local_frame(spark, sorted(MIX_WEIGHTS.items()), "lang string, w int")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_l"))
     feasible = (
         counts.join(F.broadcast(weights), "lang")

@@ -14,7 +14,11 @@ the session is handed to us (the driver harness creates its own).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import IntegralType, StructType
 
 #: Runtime-settable SQL confs that define this engine's semantics.
 #: All of these are session-scoped (safe to set on a borrowed session).
@@ -101,10 +105,80 @@ def materialize(df: DataFrame) -> DataFrame:
     loss; otherwise a ``localCheckpoint`` — executor-local blocks, fast
     but NOT recoverable, right for a single local JVM.  Both are eager
     and row-identical.
+
+    **Small-input local arm.**  The graph loops (PageRank, label
+    propagation, both connected-components forms) materialize their
+    edge list once, with an ``Observation`` (:func:`size_metrics`)
+    riding that job for its row and null counts.  When the observed
+    list fits ``spark.sql.autoBroadcastJoinThreshold`` — Spark's own
+    bound on what it ships through the driver —
+    :func:`fetch_if_small` pulls it through Arrow in one job, the loop
+    replays its synchronous rounds in exact int64 numpy, and the
+    result comes back as an Arrow-built ``LocalRelation``
+    (:func:`local_frame`).  It fails closed (the distributed loop runs
+    unchanged) when the threshold is ``<= 0`` (``-1`` turns the arm
+    off), when ``rows x 8 bytes x columns`` exceeds it, when a column
+    is not an integer type, or when an id column holds nulls.
     """
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint()
     return df.localCheckpoint()
+
+
+def size_metrics(*id_cols: str) -> dict[str, Column]:
+    """The local arm's size probe, for
+    :func:`~amazon_books_review_spark.operators.metrics.with_observation`
+    on the frame a loop materializes anyway (so it costs no job):
+    ``n`` rows and ``nulls``, the null cells across ``id_cols``."""
+    nulls = sum(
+        (F.col(c).isNull().cast("long") for c in id_cols), F.lit(0).cast("long")
+    )
+    return {"n": F.count(F.lit(1)), "nulls": F.sum(nulls)}
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, as Spark
+    parses it (``10MB``, ``-1``)."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def fetch_if_small(df: DataFrame, n_rows: int, nulls: int = 0) -> pa.Table | None:
+    """``df`` as an Arrow table when the local arm may take it, else
+    ``None`` (see :func:`materialize`).  ``n_rows`` and ``nulls`` come
+    from :func:`size_metrics` on the materialization ``df`` reads, so
+    a refusal costs no job and an acceptance costs the one fetch."""
+    threshold = broadcast_threshold(df.sparkSession)
+    if threshold <= 0 or nulls or n_rows * 8 * len(df.columns) > threshold:
+        return None
+    if not all(isinstance(f.dataType, IntegralType) for f in df.schema.fields):
+        return None
+    return df.toArrow()
+
+
+def local_frame(
+    spark: SparkSession,
+    data: list[tuple] | dict[str, object],
+    schema: StructType | str,
+) -> DataFrame:
+    """A small driver-side result as an Arrow-built ``LocalRelation``.
+
+    ``data`` is a list of row tuples or a mapping of column name to
+    values (numpy arrays work).  Spark plans the frame as a
+    ``LocalTableScan`` that executes in the JVM; a frame built from a
+    Python list is a ``LogicalRDD`` whose every action starts a
+    Python-worker job.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(data, list):
+        cols = list(zip(*data)) if data else [[] for _ in schema.fields]
+        data = dict(zip(schema.names, cols))
+    table = pa.table(
+        [pa.array(data[f.name], type=f.type) for f in arrow_schema],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def delta_session_confs() -> dict[str, str]:

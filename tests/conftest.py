@@ -49,3 +49,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def distributed_arm(monkeypatch):
+    """Turn the graph loops' small-input local arm off (see
+    ``session.materialize``) so a test written for the distributed
+    loop keeps checking that loop: the arm's gate reads a broadcast
+    threshold of -1, while Spark's join planning keeps the session's
+    own threshold and so plans the joins the test was written for."""
+    from amazon_books_review_spark import session
+
+    monkeypatch.setattr(session, "broadcast_threshold", lambda spark: -1)

@@ -134,9 +134,10 @@ def test_broadcast_guard_hints_below_cap_and_drops_above(spark):
             spark.conf.set(BROADCAST_MAX_ROWS_CONF, prev)
 
 
-def test_lp_correct_past_the_broadcast_cap(spark):
+def test_lp_correct_past_the_broadcast_cap(spark, distributed_arm):
     """Label propagation must produce identical labels when the node
-    budget forces the shuffle-join path."""
+    budget forces the shuffle-join path (on the distributed loop: the
+    local arm would take this graph)."""
     from amazon_books_review_spark.operators.joins import BROADCAST_MAX_ROWS_CONF
 
     a, b = [1, 2, 3, 4], [10, 11, 12, 13]

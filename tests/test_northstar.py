@@ -104,10 +104,11 @@ class TestDedupProperties:
         assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
                        20: 20, 21: 20, 22: 20}
 
-    def test_star_cc_matches_label_prop_random_graphs(self, spark):
+    def test_star_cc_matches_label_prop_random_graphs(self, spark, distributed_arm):
         """Deterministic pseudo-random graphs (seeded): the two CC
         algorithms must agree exactly — including deep chains, the
-        case star exists for."""
+        case star exists for.  Both run their distributed loops; the
+        local arm has its own differential tests."""
         import random
 
         rng = random.Random(1234)

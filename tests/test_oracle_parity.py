@@ -26,6 +26,22 @@ def test_query_matches_oracle(spark, sf_dir, name):
     assert not problems, f"{name}: " + "; ".join(problems)
 
 
+#: entries whose graph loop takes the small-input local arm at the test
+#: scale; their parity is checked a second time on the distributed loop
+DISTRIBUTED_ARM_PARITY = (
+    "dedup_clusters",
+    "embedding_semdedup_clusters",
+    "label_propagation_communities",
+    "pagerank_copurchase",
+)
+
+
+@pytest.mark.parametrize("name", DISTRIBUTED_ARM_PARITY)
+def test_distributed_arm_matches_oracle(spark, sf_dir, name, distributed_arm):
+    problems = run_parity(spark, sf_dir, name, QUERIES[name], ORACLES[name])
+    assert not problems, f"{name}: " + "; ".join(problems)
+
+
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
 def test_rows_only_queries_run(spark, sf_dir, name):
     """Non-SQL-expressible entries must at least run and return rows."""

@@ -512,8 +512,23 @@ def test_budget_gate_catches_lost_broadcast(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+#: entries whose graph loop takes the small-input local arm at sf0.001;
+#: their PLAN_BUDGETS rows pin the distributed loop, so they are
+#: checked with the arm off (the ``distributed_arm`` fixture)
+LOCAL_ARM_ENTRIES = frozenset({
+    "pagerank_copurchase",
+    "label_propagation_communities",
+    "dedup_cluster_canonical",
+    "embedding_semdedup_clusters",
+    "embedding_semdedup_certified",
+    "embedding_semdedup_keepers",
+})
+
+
 @pytest.mark.parametrize("name", sorted(PLAN_BUDGETS))
-def test_headline_plan_budget(spark, name):
+def test_headline_plan_budget(spark, name, request):
+    if name in LOCAL_ARM_ENTRIES:
+        request.getfixturevalue("distributed_arm")
     budget = PLAN_BUDGETS[name]
     max_ex, min_bhj, max_bnlj = budget[:3]
     max_smj = budget[3] if len(budget) > 3 else 0
@@ -550,6 +565,11 @@ EAGER_BUDGETS: dict[str, int] = {
     "streaming_dedup_events": 3,
     "streaming_incremental_rollup": 11,
     "orc_lineitem_roundtrip": 1,
+    # the small-graph local arm: the edge-list checkpoint, its Arrow
+    # fetch and the upstream shuffle-map jobs; no per-round jobs
+    "pagerank_copurchase": 6,
+    "label_propagation_communities": 4,
+    "embedding_semdedup_clusters": 11,
 }
 
 

@@ -72,10 +72,11 @@ def test_connected_components_explode_symmetrize_identical(spark):
     assert got == want
 
 
-def test_propagate_labels_round1_elision_identical(spark):
+def test_propagate_labels_round1_elision_identical(spark, distributed_arm):
     """Round-1 of label propagation with identity labels is a rename of
     dst -> lbl; the elided form must equal the explicit-join form
-    (reference implementation inline here)."""
+    (reference implementation inline here).  Run on the distributed
+    loop, where the elision lives."""
     from amazon_books_review_spark.plans.graph_queries import propagate_labels
 
     edges = spark.createDataFrame(

@@ -312,12 +312,17 @@ def test_prefix_probes_guard(spark, emb_df):
 SF = "/root/testdata/sf0.001"
 
 
-def test_materialize_modes_row_identical(spark, tmp_path):
+def test_materialize_modes_row_identical(spark, tmp_path, monkeypatch):
     """``session.materialize`` writes a reliable checkpoint while the
     session has a checkpoint dir and a local one otherwise; the rows
-    must not depend on which arm ran."""
+    must not depend on which arm ran.  The graph loops' observed counts
+    must come back under the reliable arm too: the small-graph local
+    arm still engages, and with it turned off the distributed loops
+    (whose node counts and convergence checks are observations) give
+    the same rows."""
     from collections import Counter
 
+    from amazon_books_review_spark import session
     from amazon_books_review_spark.plans.graph_queries import (
         label_propagation_communities,
     )
@@ -333,18 +338,30 @@ def test_materialize_modes_row_identical(spark, tmp_path):
         label_propagation_communities,
         pagerank_copurchase,
     )
+    graph_loops = queries[1:]
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    def is_local(df):
+        return "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
-    local = [Counter(tuple(r) for r in q(spark, SF).collect()) for q in queries]
+    local = [rows(q(spark, SF)) for q in queries]
 
     ckpt = tmp_path / "ckpt"
     sc.setCheckpointDir(str(ckpt))
-    reliable, written = [], []
+    reliable, written, took_local = [], [], []
     try:
         for q in queries:
             before = {f for f in ckpt.rglob("*") if f.is_file()}
-            reliable.append(Counter(tuple(r) for r in q(spark, SF).collect()))
+            df = q(spark, SF)
+            reliable.append(rows(df))
+            took_local.append(is_local(df))
             written.append({f for f in ckpt.rglob("*") if f.is_file()} - before)
+        monkeypatch.setattr(session, "broadcast_threshold", lambda spark: -1)
+        distributed = [rows(q(spark, SF)) for q in graph_loops]
     finally:
         # unset the session checkpoint dir (Option.apply(null) ->
         # scala None via the var setter) so the session fixture's
@@ -352,6 +369,8 @@ def test_materialize_modes_row_identical(spark, tmp_path):
         none = sc._jvm.scala.Option.apply(None)
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(none)
     assert local == reliable
+    assert distributed == local[1:]
+    assert took_local == [False, True, True]
     for q, files in zip(queries, written):
         assert files, f"{q.__name__} wrote nothing under the checkpoint dir"
     assert sc.getCheckpointDir() is None
